@@ -1,15 +1,15 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
+import java.util.concurrent.atomic.LongAdder
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
+import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -61,27 +61,48 @@ final class NatsScanScan(file: String, dir: String, stream: String,
   private def tsLoUs: Long = TsBounds.loUs(tsLoNs)
   private def tsHiUs: Long = TsBounds.hiUs(tsHiNs)
 
+  /** this scan's planning counts ([[ScanMetrics]]), set by [[planned]] —
+    * so a streaming scan, which never plans here, reports nothing */
+  @volatile private var plannerMetrics: Array[CustomTaskMetric] = Array.empty
+
   /** planned once, shared by partition planning and [[estimateStatistics]]
-    * (both run on the driver; footer reads are metadata-only) */
+    * (both run on the driver; footer statistics come from [[PartFooters]]) */
   private lazy val planned: Array[NatsScanPartition] = {
     val nativeDir = new java.io.File(s"$dir/$stream.msgs")
-    if (nativeDir.isDirectory) {
-      // native message store written by NatsScanBatchWrite: prune row groups
-      // across part files directly on seq / ts_nats statistics. Only
-      // committed files count — '_'/'.'-prefixed names are staged epochs,
-      // checksum siblings, or aborted attempts and may be partial.
-      StoreEpochs.committedFiles(nativeDir, asOfEpoch)
-        .flatMap(f => planFile(f.getPath, native = true))
-    } else {
-      asOfEpoch.foreach(_ => sys.error(
-        "nats_scan: as_of_epoch requires a native message store (the " +
-          "fixture file has no epoch ledger)"))
-      planFile(file, native = false)
+    val files =
+      if (nativeDir.isDirectory)
+        // native message store written by NatsScanBatchWrite: prune row
+        // groups across part files directly on seq / ts_nats statistics.
+        // Only committed files count — '_'/'.'-prefixed names are staged
+        // epochs, checksum siblings, or aborted attempts and may be partial.
+        StoreEpochs.committedFiles(nativeDir, asOfEpoch).toSeq
+          .map(f => (f.getPath, true))
+      else {
+        asOfEpoch.foreach(_ => sys.error(
+          "nats_scan: as_of_epoch requires a native message store (the " +
+            "fixture file has no epoch ledger)"))
+        Seq((file, false))
+      }
+    val reads = new LongAdder
+    val groups = files.map { case (p, native) =>
+      (p, native, PartFooters.rowGroups(p, native, reads))
     }
+    val kept = groups.flatMap { case (p, native, rgs) =>
+      rgs.filter(keep).map(rg =>
+        NatsScanPartition(p, rg.start, rg.start + rg.bytes, native, rg.rows))
+    }.toArray
+    plannerMetrics = ScanMetrics.plannerValues(
+      groups.map(_._3.size.toLong).sum, kept.length.toLong, reads.sum())
+    kept
   }
 
   override def planInputPartitions(): Array[InputPartition] =
     planned.map(p => p: InputPartition)
+
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    ScanMetrics.plannerMetrics
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] = plannerMetrics
 
   /** Post-pruning size/row estimate from the SAME row-group metadata the
     * partition planner kept — so Catalyst's join planning sees the pruned
@@ -99,65 +120,24 @@ final class NatsScanScan(file: String, dir: String, stream: String,
       java.util.OptionalLong.of(rows)
   }
 
-  private def planFile(path: String, native: Boolean): Array[NatsScanPartition] = {
-    val (seqCol, tsCol) = if (native) ("seq", "ts_nats") else ("event_id", "ts")
-    val seqAdj = if (native) 0L else 1L          // fixture: seq = event_id + 1
-    // both layouts now store µs int64 (native ts_nats TIMESTAMP(MICROS),
-    // fixture ts TIMESTAMP(MICROS)) — compare stats in µs
-    val (tsLo, tsHi) = (tsLoUs, tsHiUs)
-    val conf = new Configuration()
-    val in = HadoopInputFile.fromPath(new Path(path), conf)
-    val reader = ParquetFileReader.open(in)
-    try {
-      reader.getRowGroups.asScala.flatMap { rg =>
-        val idCol = rg.getColumns.asScala.find(_.getPath.toDotString == seqCol)
-        val tCol = rg.getColumns.asScala.find(_.getPath.toDotString == tsCol)
-        // subject-PREFIX pruning off string min/max stats (native layout
-        // stores subject verbatim): a row group whose [min, max] subject
-        // range misses [p, p+∞-of-last-char) can't contain a match. A bare
-        // substring can't do this — docs/SUBJECT_PRUNING.md. Only effective
-        // when the store is subject-clustered; always correct.
-        val keepByPrefix = !native || subjectPrefixes.isEmpty || {
-          rg.getColumns.asScala.find(_.getPath.toDotString == "subject")
-            .forall { c =>
-              val st = c.getStatistics
-              if (st == null || !st.hasNonNullValue) true
-              else {
-                val mn = new String(st.getMinBytes, "UTF-8")
-                val mx = new String(st.getMaxBytes, "UTF-8")
-                // matches of prefix p sort in [p, next(p)): the group can
-                // be skipped iff max < p (all rows before the range) or min
-                // sorts after every p-prefixed string (min ≥ p yet doesn't
-                // start with p)
-                subjectPrefixes.forall(p =>
-                  mx >= p && !(mn > p && !mn.startsWith(p)))
-              }
-            }
-        }
-        val keepBySeq = idCol.forall { c =>
-          val st = c.getStatistics
-          if (st == null || !st.hasNonNullValue) true
-          else {
-            val mn = st.genericGetMin.asInstanceOf[java.lang.Long] + seqAdj
-            val mx = st.genericGetMax.asInstanceOf[java.lang.Long] + seqAdj
-            mx >= seqLo && mn <= seqHi
-          }
-        }
-        val keepByTs = tCol.forall { c =>
-          val st = c.getStatistics
-          if (st == null || !st.hasNonNullValue) true
-          else {
-            val mn = st.genericGetMin.asInstanceOf[java.lang.Long].longValue()
-            val mx = st.genericGetMax.asInstanceOf[java.lang.Long].longValue()
-            mx >= tsLo && mn <= tsHi
-          }
-        }
-        if (keepBySeq && keepByTs && keepByPrefix)
-          Some(NatsScanPartition(path, rg.getStartingPos,
-            rg.getStartingPos + rg.getTotalByteSize, native, rg.getRowCount))
-        else None
-      }.toArray
-    } finally reader.close()
+  /** a row group survives unless its statistics prove it misses the pushed
+    * seq / ts bounds or every subject prefix (both layouts store ts in µs;
+    * only the native layout carries subject statistics) */
+  private def keep(rg: RowGroupStats): Boolean = {
+    // subject-PREFIX pruning off string min/max stats (native layout
+    // stores subject verbatim): a row group whose [min, max] subject range
+    // misses [p, p+∞-of-last-char) can't contain a match. A bare substring
+    // can't do this — docs/SUBJECT_PRUNING.md. Only effective when the
+    // store is subject-clustered; always correct.
+    val keepByPrefix = rg.subject.forall { case (mn, mx) =>
+      // matches of prefix p sort in [p, next(p)): the group can be skipped
+      // iff max < p (all rows before the range) or min sorts after every
+      // p-prefixed string (min ≥ p yet doesn't start with p)
+      subjectPrefixes.forall(p => mx >= p && !(mn > p && !mn.startsWith(p)))
+    }
+    val keepBySeq = rg.seq.forall { case (mn, mx) => mx >= seqLo && mn <= seqHi }
+    val keepByTs = rg.tsUs.forall { case (mn, mx) => mx >= tsLoUs && mn <= tsHiUs }
+    keepBySeq && keepByTs && keepByPrefix
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -182,7 +162,7 @@ final case class NatsScanPartition(file: String, rangeStart: Long,
   * part files (`part-*-<jobToken>`) carry no epoch: a store containing any
   * is not epoch-ledgered and time travel on it is REFUSED rather than
   * answered approximately. */
-private[sources] object StoreEpochs {
+private[graft] object StoreEpochs {
   // %06d is a MINIMUM width: epochs past 999,999 print wider, so the
   // ledger pattern accepts 6-or-more digits
   private val EpochName = "^epoch-(\\d{6,})-part-.*\\.parquet$".r

@@ -1,10 +1,5 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
@@ -40,58 +35,26 @@ object NatsStatsScan {
       StructField(if (max) "max(ts_nats)" else "min(ts_nats)", TimestampType)
   }
 
-  /** footer totals across `files`: (rows, min/max event-id col, min/max ts
-    * col). Returns None when any row group lacks the needed statistics —
-    * the caller then declines the pushdown and the normal scan runs. */
+  /** footer totals across `files` ([[PartFooters]]): (rows, min/max seq,
+    * min/max ts µs). Returns None when any non-empty row group lacks the
+    * needed statistics — the caller then declines the pushdown and the
+    * normal scan runs. */
   def fromFooters(files: Seq[java.io.File], native: Boolean,
                   aggs: Seq[StatAgg]): Option[Seq[Any]] = {
-    val (seqCol, tsCol) = if (native) ("seq", "ts_nats") else ("event_id", "ts")
-    val needSeq = aggs.exists(_.isInstanceOf[MinSeq])
-    val needTs = aggs.exists(_.isInstanceOf[MinTs])
-    var rows = 0L
-    var seqMin = Long.MaxValue; var seqMax = Long.MinValue
-    var tsMin = Long.MaxValue; var tsMax = Long.MinValue
-    var statsOk = true
-    val conf = new Configuration()
-    files.foreach { f =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.getPath), conf))
-      try {
-        reader.getFooter.getBlocks.asScala.foreach { b =>
-          rows += b.getRowCount
-          def bounds(col: String): Option[(Long, Long)] =
-            b.getColumns.asScala.find(_.getPath.toDotString == col)
-              .map(_.getStatistics)
-              .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
-              .map(s => (s.genericGetMin.asInstanceOf[java.lang.Long].longValue(),
-                s.genericGetMax.asInstanceOf[java.lang.Long].longValue()))
-          if (needSeq) bounds(seqCol) match {
-            case Some((lo, hi)) =>
-              seqMin = math.min(seqMin, lo); seqMax = math.max(seqMax, hi)
-            case None => if (b.getRowCount > 0) statsOk = false
-          }
-          if (needTs) bounds(tsCol) match {
-            case Some((lo, hi)) =>
-              tsMin = math.min(tsMin, lo); tsMax = math.max(tsMax, hi)
-            case None => if (b.getRowCount > 0) statsOk = false
-          }
-        }
-      } finally reader.close()
-    }
-    if (!statsOk) return None
-    // layout translation: fixture seq = event_id + 1; ts stats are int64 µs
-    // in BOTH layouts (native ts_nats and fixture ts are TIMESTAMP(MICROS))
-    val seqAdj = if (native) 0L else 1L
-    def tsUs(v: Long): Long = v
-    Some(aggs.map {
+    val rgs = files.flatMap(f => PartFooters.rowGroups(f.getPath, native))
+    def bounds(col: RowGroupStats => Option[(Long, Long)]): Option[(Long, Long)] =
+      if (rgs.exists(rg => rg.rows > 0 && col(rg).isEmpty)) None
+      else Some(rgs.flatMap(col).foldLeft((Long.MaxValue, Long.MinValue)) {
+        case ((lo, hi), (mn, mx)) => (math.min(lo, mn), math.max(hi, mx))
+      })
+    val rows = rgs.map(_.rows).sum
+    val seq = if (aggs.exists(_.isInstanceOf[MinSeq])) bounds(_.seq) else Some((0L, 0L))
+    val ts = if (aggs.exists(_.isInstanceOf[MinTs])) bounds(_.tsUs) else Some((0L, 0L))
+    for ((seqMin, seqMax) <- seq; (tsMin, tsMax) <- ts) yield aggs.map {
       case CountStarAgg => rows
-      case MinSeq(max) =>
-        if (rows == 0L) null
-        else if (max) seqMax + seqAdj else seqMin + seqAdj
-      case MinTs(max) =>
-        if (rows == 0L) null
-        else if (max) tsUs(tsMax) else tsUs(tsMin)
-    })
+      case MinSeq(max) => if (rows == 0L) null else if (max) seqMax else seqMin
+      case MinTs(max) => if (rows == 0L) null else if (max) tsMax else tsMin
+    }
   }
 
   /** transport totals from one streamInfo RPC (count + seq bounds only;

@@ -118,16 +118,13 @@ object NatsStoreMaintenance {
                    cutoffMicros: Long): ExpireStats = {
     val store = new File(s"$dir/$stream.msgs")
     require(store.isDirectory, s"no native store at $store")
-    val files = Option(store.listFiles((f: File) =>
-      f.getName.endsWith(".parquet") && !f.getName.startsWith("_") &&
-        !f.getName.startsWith("."))).toSeq.flatten.sortBy(_.getName)
+    val files = StoreEpochs.committedFiles(store, None)
 
-    val conf = spark.sparkContext.hadoopConfiguration
     var dropped = 0
     val straddle = scala.collection.mutable.ArrayBuffer[File]()
     var kept = 0
     files.foreach { f =>
-      tsBounds(f, conf) match {
+      tsBounds(f) match {
         case Some((_, maxTs)) if maxTs < cutoffMicros =>
           require(f.delete(), s"expire unlink failed: $f"); dropped += 1
         case Some((minTs, _)) if minTs >= cutoffMicros => kept += 1
@@ -172,27 +169,13 @@ object NatsStoreMaintenance {
   }
 
   /** (min, max) of the ts_nats column in MICROS from the file's footer
-    * row-group statistics — no data pages read. None when any row group
-    * lacks statistics (the caller then rewrites conservatively). */
-  private def tsBounds(f: File,
-                       conf: org.apache.hadoop.conf.Configuration)
-      : Option[(Long, Long)] = {
-    import scala.jdk.CollectionConverters._
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.getPath), conf))
-    try {
-      val perBlock = reader.getFooter.getBlocks.asScala.toSeq.map { b =>
-        b.getColumns.asScala
-          .find(_.getPath.toDotString == "ts_nats")
-          .map(_.getStatistics)
-          .filter(s => s != null && !s.isEmpty && s.hasNonNullValue)
-          .map(s => (s.genericGetMin.asInstanceOf[java.lang.Long].longValue(),
-            s.genericGetMax.asInstanceOf[java.lang.Long].longValue()))
-      }
-      if (perBlock.isEmpty || perBlock.exists(_.isEmpty)) None
-      else Some((perBlock.flatten.map(_._1).min, perBlock.flatten.map(_._2).max))
-    } finally reader.close()
+    * row-group statistics ([[PartFooters]]) — no data pages read. None when
+    * any row group lacks statistics (the caller then rewrites
+    * conservatively). */
+  private def tsBounds(f: File): Option[(Long, Long)] = {
+    val perBlock = PartFooters.rowGroups(f.getPath, native = true).map(_.tsUs)
+    if (perBlock.isEmpty || perBlock.exists(_.isEmpty)) None
+    else Some((perBlock.flatten.map(_._1).min, perBlock.flatten.map(_._2).max))
   }
 
   private def deleteRecursively(f: File): Unit = {
@@ -209,9 +192,7 @@ object NatsStoreMaintenance {
   def epochs(dir: String, stream: String): Seq[(Long, Int, Long)] = {
     val store = new File(s"$dir/$stream.msgs")
     if (!store.isDirectory) return Nil
-    Option(store.listFiles((f: File) => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith("_") && !f.getName.startsWith(".")))
-      .getOrElse(Array.empty)
+    StoreEpochs.committedFiles(store, None)
       .groupBy(f => StoreEpochs.epochOf(f.getName).getOrElse(-1L))
       .toSeq
       .map { case (e, fs) => (e, fs.length, fs.map(_.length()).sum) }

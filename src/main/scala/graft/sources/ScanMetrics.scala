@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.connector.metric.{CustomSumMetric, CustomTaskMetric}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 
 /** DSv2 custom scan metrics for the transport path — the observability a
   * 1000-executor deployment actually operates on: every `nats_scan` over a
@@ -22,11 +22,25 @@ import org.apache.spark.sql.connector.metric.{CustomSumMetric, CustomTaskMetric}
   * Wired through the standard DSv2 seam: [[NatsTransportScan
   * .supportedCustomMetrics]] declares them, each reader reports via
   * `currentMetricsValues()`, Spark's accumulator plumbing does the rest —
-  * no listener, no side channel. */
+  * no listener, no side channel.
+  *
+  * The native-store scan ([[NatsScanScan]]) plans on the driver and
+  * reports its planning through `reportDriverMetrics`:
+  *
+  *   - `row_groups_total`   — row groups in the committed files it planned
+  *                            over.
+  *   - `row_groups_planned` — row groups left after seq/ts/subject-prefix
+  *                            statistics pruning (one partition each).
+  *   - `footer_reads`       — part-file footers opened while planning; zero
+  *                            when every footer was already cached
+  *                            ([[PartFooters]]). */
 object ScanMetrics {
   final val FetchRpcs = "fetch_rpcs"
   final val MsgsEmitted = "msgs_emitted"
   final val MsgsFiltered = "msgs_filtered"
+  final val RowGroupsTotal = "row_groups_total"
+  final val RowGroupsPlanned = "row_groups_planned"
+  final val FooterReads = "footer_reads"
 
   final class FetchRpcsMetric extends CustomSumMetric {
     override def name(): String = FetchRpcs
@@ -40,6 +54,30 @@ object ScanMetrics {
     override def name(): String = MsgsFiltered
     override def description(): String = "messages dropped by residual filters"
   }
+
+  final class RowGroupsTotalMetric extends CustomSumMetric {
+    override def name(): String = RowGroupsTotal
+    override def description(): String = "row groups in the planned files"
+  }
+  final class RowGroupsPlannedMetric extends CustomSumMetric {
+    override def name(): String = RowGroupsPlanned
+    override def description(): String = "row groups left after statistics pruning"
+  }
+  final class FooterReadsMetric extends CustomSumMetric {
+    override def name(): String = FooterReads
+    override def description(): String = "part-file footers read while planning"
+  }
+
+  def plannerMetrics: Array[CustomMetric] = Array(
+    new RowGroupsTotalMetric, new RowGroupsPlannedMetric, new FooterReadsMetric)
+
+  /** one native-store plan's counters, in the shape `reportDriverMetrics`
+    * wants */
+  def plannerValues(total: Long, planned: Long,
+                    footerReads: Long): Array[CustomTaskMetric] = Array(
+    new CustomTaskMetric { def name = RowGroupsTotal; def value = total },
+    new CustomTaskMetric { def name = RowGroupsPlanned; def value = planned },
+    new CustomTaskMetric { def name = FooterReads; def value = footerReads })
 
   /** one task's current counters, in the shape `currentMetricsValues`
     * wants */

@@ -1,15 +1,13 @@
 package graft.streaming
 
+import java.util.Optional
+import java.util.concurrent.atomic.LongAdder
+
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.types.StructType
-import graft.sources.{NatsScanPartition, NatsScanReaderFactory, NatsScanSource}
+import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReportsSourceMetrics, SupportsTriggerAvailableNow}
+import graft.sources.{NatsScanPartition, NatsScanReaderFactory, NatsScanSource, PartFooters, StoreEpochs}
 
 /** Seq-based micro-batch stream over the message store — the superset the
   * reference only roadmaps ("live tail", /root/reference/docs/GUIDE.md:479-482;
@@ -20,53 +18,48 @@ import graft.sources.{NatsScanPartition, NatsScanReaderFactory, NatsScanSource}
   * Each micro-batch serves the seq range (lastOffset, thisOffset] through the
   * same partition readers as the batch source; `max_msgs_per_batch` caps
   * batch size (backpressure knob, like JetStream pull-consumer batch sizes).
+  *
+  * Offset discovery lists the store once per poll; footer statistics come
+  * from [[PartFooters]], so a poll reads only the footers of part files it
+  * has not seen. Progress reports `backlogMsgs` (head seq − the batch's end
+  * offset) and `footerReads` (footers this stream has opened since it
+  * started).
   */
 final class NatsMicroBatchStream(dir: String, stream: String,
                                  maxPerBatch: Long)
-    extends MicroBatchStream with SupportsTriggerAvailableNow {
+    extends MicroBatchStream with SupportsTriggerAvailableNow
+    with ReportsSourceMetrics {
 
   private val file = s"$dir/$stream.parquet"
   private val nativeDir = new java.io.File(s"$dir/$stream.msgs")
+  private val footerReads = new LongAdder
+  /** the head seq the latest offset poll saw (-1: none yet) */
+  @volatile private var head = -1L
 
-  /** committed part files of the native store (staged/aborted skipped) */
+  /** committed part files of the native store — the batch planner's set */
   private def nativeFiles: Seq[String] =
-    if (!nativeDir.isDirectory) Nil
-    else nativeDir.listFiles((f: java.io.File) => f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .map(_.getPath).sorted.toSeq
+    StoreEpochs.committedFiles(nativeDir, None).toSeq.map(_.getPath)
 
-  /** [min, max] of a stats column across one file's row groups */
-  private def statsBounds(path: String, column: String,
-                          adj: Long): Option[(Long, Long)] = {
-    val in = HadoopInputFile.fromPath(new Path(path), new Configuration())
-    val r = ParquetFileReader.open(in)
-    try {
-      val bs = r.getRowGroups.asScala.flatMap { rg =>
-        rg.getColumns.asScala.find(_.getPath.toDotString == column)
-          .flatMap { c =>
-            val st = c.getStatistics
-            if (st == null || !st.hasNonNullValue) None
-            else Some((
-              st.genericGetMin.asInstanceOf[java.lang.Long].longValue() + adj,
-              st.genericGetMax.asInstanceOf[java.lang.Long].longValue() + adj))
-          }
-      }
-      if (bs.isEmpty) None else Some((bs.map(_._1).min, bs.map(_._2).max))
-    } finally r.close()
-  }
+  /** largest seq in the file's row-group statistics */
+  private def fileMaxSeq(path: String, native: Boolean): Option[Long] =
+    PartFooters.rowGroups(path, native, footerReads)
+      .flatMap(_.seq).map(_._2).maxOption
 
   /** Latest available sequence. The fixture file is static (computed once);
     * a native store grows as writers append/commit, so it is re-listed on
     * every offset poll — exactly how a live-tail source discovers new
     * messages (docs/LIVE_NATS.md: stream LastSeq). */
-  private def maxSeq: Long =
-    if (nativeDir.isDirectory)
-      nativeFiles.flatMap(statsBounds(_, "seq", 0L)).map(_._2)
-        .maxOption.getOrElse(0L)
-    else fixtureMaxSeq
+  private def maxSeq: Long = {
+    val h =
+      if (nativeDir.isDirectory)
+        nativeFiles.flatMap(fileMaxSeq(_, native = true)).maxOption.getOrElse(0L)
+      else fixtureMaxSeq
+    head = h
+    h
+  }
 
   private lazy val fixtureMaxSeq: Long =
-    statsBounds(file, "event_id", 1L).map(_._2).getOrElse(0L)
+    fileMaxSeq(file, native = false).getOrElse(0L)
 
   override def initialOffset(): Offset = SeqOffset(0L)
 
@@ -77,7 +70,9 @@ final class NatsMicroBatchStream(dir: String, stream: String,
   override def latestOffset(start: Offset, limit: ReadLimit): Offset =
     SeqOffset(nextOffset(start.asInstanceOf[SeqOffset].seq))
 
-  override def reportLatestOffset(): Offset = SeqOffset(maxSeq)
+  // the head this trigger's offset poll just saw: no second listing
+  override def reportLatestOffset(): Offset =
+    SeqOffset(if (head >= 0) head else maxSeq)
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
@@ -85,7 +80,7 @@ final class NatsMicroBatchStream(dir: String, stream: String,
   // still in maxPerBatch-sized micro-batches
   override def prepareForTriggerAvailableNow(): Unit = { val _ = maxSeq }
 
-  override def deserializeOffset(json: String): Offset =
+  override def deserializeOffset(json: String): SeqOffset =
     SeqOffset(json.trim.toLong)
 
   override def commit(end: Offset): Unit = ()
@@ -97,20 +92,28 @@ final class NatsMicroBatchStream(dir: String, stream: String,
     val hi = end.asInstanceOf[SeqOffset].seq
     if (hi < lo) Array.empty
     else if (nativeDir.isDirectory)
-      // one partition per part file whose seq stats overlap the batch range
-      nativeFiles.flatMap { p =>
-        statsBounds(p, "seq", 0L) match {
-          case Some((mn, mx)) if mx >= lo && mn <= hi =>
-            Some(StreamBatch(p, lo, hi, native = true): InputPartition)
-          case Some(_) => None
-          case None => Some(StreamBatch(p, lo, hi, native = true): InputPartition)
-        }
-      }.toArray
+      // one partition per part file unless every row group's seq stats
+      // miss the batch range
+      nativeFiles.filter { p =>
+        PartFooters.rowGroups(p, native = true, footerReads)
+          .exists(_.seq.forall { case (mn, mx) => mx >= lo && mn <= hi })
+      }.map(p => StreamBatch(p, lo, hi, native = true): InputPartition).toArray
     else Array(StreamBatch(file, lo, hi))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new StreamReaderFactory(stream)
+
+  override def metrics(latestConsumedOffset: Optional[Offset])
+      : java.util.Map[String, String] = {
+    val end =
+      if (latestConsumedOffset.isPresent)
+        deserializeOffset(latestConsumedOffset.get.json).seq
+      else 0L
+    val h = if (head >= 0) head else maxSeq
+    Map("backlogMsgs" -> math.max(0L, h - end).toString,
+      "footerReads" -> footerReads.sum().toString).asJava
+  }
 
   /** cap the next batch at maxPerBatch messages (AdmissionControl-style) */
   def nextOffset(current: Long): Long = math.min(maxSeq, current + maxPerBatch)

@@ -147,16 +147,25 @@ object StreamingDedup {
       // components) but the components run EAGERLY (checkpoint + driver
       // union-find) while the probe used to wait its turn inside the
       // survivors write — overlap them (guide §2.6): the probe's drop set
-      // is tracked-cached and materialized on a sibling thread while the
-      // CC rounds run, so the batch's two expensive subtrees share the
-      // executors instead of queueing. `dropVsIndexC` is ids-only, so the
-      // cache is tiny; `survivors` is still consumed twice (outDir write +
-      // index-extend join), which is why the union stays cached too.
-      val dropVsIndexC = graft.Caches.tracked(dropVsIndex)
+      // is checkpointed on a sibling thread while the CC rounds run, so the
+      // batch's two expensive subtrees share the executors instead of
+      // queueing. `dropVsIndexC` is ids-only, so the checkpoint is tiny;
+      // `survivors` is still consumed twice (outDir write + index-extend
+      // join), which is why the union stays cached too.
+      //
+      // A checkpoint, not a cache: a cached frame whose plan reads the
+      // index is re-planned by CacheManager.recacheByPath after each of the
+      // index extend's two appends, which DedupIndex runs on two threads.
+      // Two such re-plans of one frame race on the tables' shared
+      // InMemoryFileIndex (not thread-safe: a planner reads a null
+      // partitionSpec while the other thread refreshes it — the
+      // intermittent "phase optimization failed" NPE). The checkpoint's
+      // plan reads no index path, so the appends re-plan nothing.
+      var dropVsIndexC: DataFrame = null
       var dropInBatch: DataFrame = null
       label("index probe ∥ in-batch LSH components")
       graft.operators.ParallelOps.inParallel(
-        { dropVsIndexC.count(); () },
+        { dropVsIndexC = graft.Caches.checkpointed(dropVsIndex) },
         {
           val batchPairs = Dedup.minhashLshPairsFromSignatures(sig,
             cfg.idCol, cfg.numHashes, cfg.bands, cfg.minEst)
@@ -206,6 +215,10 @@ object StreamingDedup {
           .write.mode("append").parquet(s"${cfg.indexDir}/sigs")
       }
       sig.unpersist()
+      // this batch's drop set is spent: release it now (no harness drains
+      // the registry between a stream's micro-batches)
+      dropped.unpersist()
+      graft.Caches.free(dropVsIndexC)
       label("batch marker + auto-compact")
       BatchMarker.record(spark, cfg.indexDir, batchId)
       // auto-compaction AFTER the marker: compaction is content-neutral

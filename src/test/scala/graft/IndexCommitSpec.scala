@@ -500,8 +500,9 @@ class IndexCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("footerRowCount over a 5000-file listing is PARALLEL and CACHED: " +
-    "exact counts, bounded first pass, near-instant repeat (describe on " +
-    "a fragmented index is no longer a serial driver loop)") {
+    "exact counts, each footer opened once on the pool with opens in " +
+    "flight together, zero opens on the repeat (describe on a fragmented " +
+    "index is no longer a serial driver loop)") {
     import spark.implicits._
     val root = tmp("graft_ic_manyfooters")
     val seedDir = s"$root/seed"
@@ -515,21 +516,30 @@ class IndexCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
       java.nio.file.Files.copy(src,
         java.nio.file.Paths.get(s"$root/many/part_$i.parquet"))
     }
-    val files = f.listStatus(new Path(s"$root/many")).toSeq
+    // the same files seen through the counting filesystem
+    val conf = new org.apache.hadoop.conf.Configuration(
+      spark.sparkContext.hadoopConfiguration)
+    conf.set("fs.countfs.impl", classOf[CountingFs].getName)
+    val counted = new Path(s"countfs://$root/many")
+    val files = counted.getFileSystem(conf).listStatus(counted).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
     assert(files.size == 5000)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val t0 = System.nanoTime()
+    CountingFs.reset()
     val n1 = IndexCommit.footerRowCount(conf, files)
-    val coldMs = (System.nanoTime() - t0) / 1e6
     assert(n1 == 15000L, s"expected 5000 files x 3 rows, got $n1")
-    val t1 = System.nanoTime()
+    val cold = CountingFs.snapshot()
+    assert(cold.opens.size == 5000 && cold.opens.values.forall(_ == 1),
+      s"cold pass must open each footer exactly once: ${cold.opens.size} " +
+        s"files, ${cold.opens.values.sum} opens")
+    assert(cold.threads.forall(_.startsWith("graft-footer-read")),
+      s"footers must be opened on the footer pool: ${cold.threads}")
+    assert(cold.maxInFlight > 1,
+      "the footer pool never had two opens in flight: the cold pass is serial")
+    CountingFs.reset()
     val n2 = IndexCommit.footerRowCount(conf, files)
-    val warmMs = (System.nanoTime() - t1) / 1e6
     assert(n2 == 15000L)
-    assert(coldMs < 10000.0, s"cold pass took $coldMs ms")
-    assert(warmMs < 1000.0,
-      s"cached pass must skip every footer read, took $warmMs ms")
+    assert(CountingFs.snapshot().opens.isEmpty,
+      "cached pass must skip every footer read")
   }
 
   test("footerRowCount returns exact parquet row counts with zero Spark " +
@@ -635,5 +645,54 @@ class IndexCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
       newCopy.forall(n => doomed.exists(_.endsWith(n))), doomed)
     doomed.foreach(IndexCommit.tryReclaim(f, _))
     assert(read(target) == Seq(3L), "the sweep must never touch the target")
+  }
+}
+
+/** The local filesystem under the `countfs` scheme, counting `open` calls
+  * per path. The first open after [[CountingFs.reset]] stays in flight
+  * until a second open arrives (or 60 s pass), so `maxInFlight > 1` holds
+  * exactly when two opens overlapped — a serial reader cannot reach it. */
+final class CountingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("countfs:///")
+  override def getScheme: String = "countfs"
+  override def open(p: Path, bufferSize: Int)
+      : org.apache.hadoop.fs.FSDataInputStream = {
+    CountingFs.opened(p)
+    super.open(p, bufferSize)
+  }
+}
+
+object CountingFs {
+  final case class Snapshot(opens: Map[String, Int], threads: Set[String],
+                            maxInFlight: Int)
+  private val opens =
+    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+  private val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val inFlight = new java.util.concurrent.atomic.AtomicInteger()
+  private val maxInFlight = new java.util.concurrent.atomic.AtomicInteger()
+  private val first = new java.util.concurrent.atomic.AtomicBoolean()
+  @volatile private var second = new java.util.concurrent.CountDownLatch(1)
+
+  def reset(): Unit = {
+    opens.clear(); threads.clear(); maxInFlight.set(0); first.set(false)
+    second = new java.util.concurrent.CountDownLatch(1)
+  }
+
+  def snapshot(): Snapshot = {
+    import scala.jdk.CollectionConverters._
+    Snapshot(opens.asScala.map { case (k, v) => k -> v.intValue }.toMap,
+      threads.asScala.toSet, maxInFlight.get)
+  }
+
+  private[graft] def opened(p: Path): Unit = {
+    opens.merge(p.toString, 1, (a: Integer, b: Integer) => a + b)
+    threads.add(Thread.currentThread.getName)
+    maxInFlight.accumulateAndGet(inFlight.incrementAndGet(),
+      (a: Int, b: Int) => math.max(a, b))
+    try {
+      if (first.compareAndSet(false, true))
+        second.await(60, java.util.concurrent.TimeUnit.SECONDS): Unit
+      else second.countDown()
+    } finally inFlight.decrementAndGet(): Unit
   }
 }

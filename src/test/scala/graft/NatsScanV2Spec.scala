@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -137,5 +137,126 @@ class NatsScanV2Spec extends AnyFunSuite with BeforeAndAfterAll {
     val rows = v2.filter(col("subject").endsWith(".7")).select("subject").collect()
     assert(rows.nonEmpty)
     assert(rows.forall(_.getString(0).endsWith(".7")))
+  }
+
+  // --- footer statistics cache: each part-file footer is read once ---
+
+  private def tmpDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** appends messages [from, until) to the native store in `dir` as one
+    * part file; message i has seq i + seqShift */
+  private def appendStore(dir: String, from: Long, until: Long,
+                          seqShift: Long = 0L): Unit =
+    spark.range(from, until).select(lit("events").as("stream"),
+        concat(lit("events.k"), (col("id") % 3).cast("string")).as("subject"),
+        (col("id") + seqShift).as("seq"),
+        timestamp_micros(col("id") * 1000000L).as("ts_nats"),
+        lpad(col("id").cast("string"), 8, "0").cast("binary").as("payload"))
+      .coalesce(1).write.format("nats_scan").option("dir", dir)
+      .mode("append").save()
+
+  private def committed(dir: String): Seq[java.io.File] =
+    new java.io.File(s"$dir/events.msgs").listFiles().toSeq
+      .filter(f => f.getName.endsWith(".parquet") &&
+        !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .sortBy(_.getName)
+
+  /** runs `df` and returns the planning counters of its nats_scan node */
+  private def planMetrics(df: DataFrame): Map[String, Long] = {
+    df.collect()
+    df.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.getOrElse(fail("no BatchScanExec in plan"))
+      .metrics.map { case (k, m) => k -> m.value }.toMap
+  }
+
+  private def seqs(df: DataFrame): Seq[Long] =
+    df.select("seq").collect().map(_.getLong(0)).toSeq.sorted
+
+  /** the part files' rows read straight from parquet, bypassing the scan
+    * planner and its footer cache */
+  private def direct(dir: String): Seq[Long] =
+    seqs(spark.read.parquet(committed(dir).map(_.getPath): _*))
+
+  test("planning an unchanged native store twice reads zero footers the " +
+    "second time; row-group counters report the pruning") {
+    val tmp = tmpDir("graft_footer_once")
+    appendStore(tmp, 1L, 101L); appendStore(tmp, 101L, 201L)
+    appendStore(tmp, 201L, 301L)
+    assert(committed(tmp).size == 3)
+    def q = spark.read.format("nats_scan").option("dir", tmp).load()
+      .filter(col("seq") > 150L).select("seq")
+    val first = planMetrics(q)
+    assert(first("footer_reads") == 3L, first.toString)
+    assert(first("row_groups_total") == 3L, first.toString)
+    assert(first("row_groups_planned") == 2L, first.toString)
+    val second = planMetrics(q)
+    assert(second("footer_reads") == 0L, second.toString)
+    assert(second("row_groups_total") == 3L && second("row_groups_planned") == 2L,
+      second.toString)
+    assert(seqs(q) == (151L to 300L))
+    // one append: the next plan reads exactly the new file's footer
+    appendStore(tmp, 301L, 351L)
+    val third = planMetrics(q)
+    assert(third("footer_reads") == 1L, third.toString)
+    assert(third("row_groups_total") == 4L && third("row_groups_planned") == 3L,
+      third.toString)
+    assert(seqs(q) == (151L to 350L))
+  }
+
+  test("a part file replaced under its own name (epoch replay) is read " +
+    "again: results equal a direct read of the new file") {
+    import graft.sources.{NatsScanCommit, NatsScanStreamingWrite}
+    // two attempts of one epoch whose files differ only in their seqs —
+    // by 2^32, which leaves every encoded size unchanged
+    val shift = 1L << 32
+    val (a, b) = (tmpDir("graft_replay_a"), tmpDir("graft_replay_b"))
+    appendStore(a, 1L, 51L); appendStore(b, 1L, 51L, seqShift = shift)
+    val tmp = tmpDir("graft_replay")
+    val store = new java.io.File(s"$tmp/events.msgs"); store.mkdirs()
+    val sw = new NatsScanStreamingWrite(tmp, "events",
+      graft.sources.NatsScanSource.envelopeSchema)
+    val finalName = "epoch-000007-part-00000.parquet"
+    def commitAttempt(from: String, staged: String): Unit = {
+      java.nio.file.Files.copy(committed(from).head.toPath,
+        new java.io.File(store, staged).toPath)
+      sw.commit(7L, Array(NatsScanCommit(staged, finalName)))
+    }
+    def q = spark.read.format("nats_scan").option("dir", tmp).load().select("seq")
+    commitAttempt(a, "_inprogress_a.parquet")
+    assert(planMetrics(q)("footer_reads") == 1L)
+    assert(seqs(q) == (1L to 50L))
+    val before = new java.io.File(store, finalName)
+    val (len, mtime) =
+      (before.length(), java.nio.file.Files.getLastModifiedTime(before.toPath))
+    commitAttempt(b, "_inprogress_b.parquet")
+    val after = new java.io.File(store, finalName)
+    // same name, length and mtime as the replaced file: only the file key
+    // tells the two apart
+    java.nio.file.Files.setLastModifiedTime(after.toPath, mtime)
+    assert(after.length() == len &&
+      java.nio.file.Files.getLastModifiedTime(after.toPath) == mtime)
+    val m = planMetrics(q)
+    assert(m("footer_reads") == 1L, m.toString)
+    assert(seqs(q) == direct(tmp))
+    assert(seqs(q) == (1L to 50L).map(_ + shift))
+  }
+
+  test("a compaction's directory swap is read again: results equal a " +
+    "direct read of the compacted files") {
+    val tmp = tmpDir("graft_footer_compact")
+    (0 until 4).foreach(k => appendStore(tmp, 1L + 100L * k, 101L + 100L * k))
+    def q = spark.read.format("nats_scan").option("dir", tmp).load()
+      .filter(col("seq") > 50L).select("seq")
+    assert(planMetrics(q)("footer_reads") == 4L)
+    graft.sources.NatsStoreMaintenance.compact(spark, tmp, "events",
+      numFiles = 2, layout = "seq")
+    assert(committed(tmp).size == 2)
+    val m = planMetrics(q)
+    assert(m("footer_reads") == 2L, m.toString)
+    assert(m("row_groups_total") == 2L, m.toString)
+    assert(seqs(q) == direct(tmp).filter(_ > 50L))
+    assert(seqs(q) == (51L to 400L))
   }
 }

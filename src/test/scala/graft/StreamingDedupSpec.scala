@@ -293,6 +293,26 @@ class StreamingDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.read.parquet(s"${cfg.indexDir}/sigs").count() == idx0)
   }
 
+  test("a gate batch leaves no cached frame behind, so the next batch's " +
+    "index appends have no cached plan over the index to re-plan") {
+    import spark.implicits._
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_sdedup_cache").toString
+    val cfg = StreamingDedup.Config(s"$root/index", s"$root/out",
+      bucketed = true, buckets = 4)
+    spark.catalog.clearCache()
+    val cache = spark.sharedState.cacheManager
+    StreamingDedup.ingest(cfg)(Seq(SDoc(1, words("alpha")),
+      SDoc(2, words("beta"))).toDF(), 0L)
+    assert(cache.isEmpty, "batch 0 left a cached frame")
+    // batch 1 probes the index (doc 3 drops against it) and appends to it
+    StreamingDedup.ingest(cfg)(Seq(SDoc(3, words("alpha")),
+      SDoc(4, words("gamma"))).toDF(), 1L)
+    assert(cache.isEmpty, "batch 1 left a cached frame")
+    assert(spark.read.parquet(cfg.outDir).select("doc_id").as[Long]
+      .collect().toSet == Set(1L, 2L, 4L))
+  }
+
   test("mode/layout mismatches fail LOUDLY instead of silently accepting " +
     "dups or destroying the index") {
     import spark.implicits._

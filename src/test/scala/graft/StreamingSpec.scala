@@ -360,4 +360,47 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(chain(eUrl).contains("start_seq/end_seq"))
   }
+
+  test("the native-store tail reads one footer per new part file and " +
+    "reports its backlog through the source's progress metrics") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_tail_footers").toString
+    def append(from: Long, until: Long): Unit =
+      spark.range(from, until).select(lit("events").as("stream"),
+          lit("events.k").as("subject"), col("id").as("seq"),
+          timestamp_micros(col("id") * 1000000L).as("ts_nats"),
+          col("id").cast("string").cast("binary").as("payload"))
+        .coalesce(1).write.format("nats_scan").option("dir", tmp)
+        .mode("append").save()
+    append(1L, 301L)
+    // the default trigger polls the store back to back while idle
+    val q = spark.readStream.format("nats_scan").option("dir", tmp)
+      .option("max_msgs_per_batch", "100").load()
+      .writeStream.format("memory").queryName("tail_footers").start()
+    def progressTo(seq: Long) = q.recentProgress.find(p =>
+      p.numInputRows > 0 && p.sources.head.endOffset == seq.toString)
+    def metric(p: org.apache.spark.sql.streaming.StreamingQueryProgress,
+               name: String): Long = p.sources.head.metrics.get(name).toLong
+    try {
+      eventually(timeout(60.seconds), interval(20.millis)) {
+        assert(progressTo(300L).isDefined)
+      }
+      // three admission-capped batches against a head of 300
+      val caughtUp = (1 to 3).map(k => progressTo(100L * k).get)
+      assert(caughtUp.map(metric(_, "backlogMsgs")) == Seq(200L, 100L, 0L))
+      // every poll of the unchanged store (batches and idle polls alike)
+      // reused the one footer read of the first poll
+      assert(caughtUp.map(metric(_, "footerReads")) == Seq(1L, 1L, 1L))
+      append(301L, 351L)
+      eventually(timeout(60.seconds), interval(20.millis)) {
+        assert(progressTo(350L).isDefined)
+      }
+      val next = progressTo(350L).get
+      assert(metric(next, "footerReads") == 2L, "one append, one new footer")
+      assert(metric(next, "backlogMsgs") == 0L)
+      assert(spark.table("tail_footers").select("seq").collect()
+        .map(_.getLong(0)).sorted.toSeq == (1L to 350L))
+    } finally q.stop()
+  }
 }
