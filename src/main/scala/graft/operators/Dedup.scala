@@ -469,8 +469,6 @@ object Dedup {
         eager = false)
       val s = labelSum(next)
       converged = s == prevSum
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"[cc] round=$iter sum=$s prev=$prevSum")
       prevSum = s
       release(labels) // round N materialized — free round N−1's blocks
       labels = next

@@ -13,13 +13,11 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Vectorized columnar readers for the `nats_scan` V2 source.
-  *
-  * The row-materializing `GroupReadSupport` readers ([[NatsScanReader]] /
-  * [[NatsNativeReader]]) build one parquet-example `Group` object graph per
-  * message — correct and pruned, but a multiple-× constant factor over
-  * columnar decode, and at 100 TB the scan IS the workload for
-  * full-stream-shaped queries. These readers decode each already-pruned row
+/** Vectorized columnar readers for the `nats_scan` V2 source: the one
+  * decoder of the message store, in both layouts. Batch scans consume the
+  * batches directly; a micro-batch stream reads them through the row view
+  * of [[NatsScanReaderFactory.createReader]], which trims each batch to
+  * its seq range. These readers decode each already-pruned row
   * group straight into Spark `ColumnarBatch`es via Spark's own
   * `VectorizedParquetRecordReader` (the engine the reference's `DataChunk`
   * emission maps to at scale, /root/reference/src/nats_scan.cpp:709-710):
@@ -33,9 +31,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *     dispatch.
   *
   * Record-level residue (seq/ts bounds, subject predicates) is NOT applied
-  * here: [[NatsScanBuilder.pushFilters]] keeps every accepted predicate
-  * residual, so Spark re-evaluates it in whole-stage codegen directly over
-  * these batches. Pushdown remains a pure skipping optimization: row-group
+  * here. In a batch scan [[NatsScanBuilder.pushFilters]] keeps every
+  * accepted predicate residual, so Spark re-evaluates it in whole-stage
+  * codegen directly over these batches; a stream's seq range is trimmed by
+  * the row view. Pushdown remains a pure skipping optimization: row-group
   * pruning at plan time ([[NatsScanScan.planInputPartitions]]) plus parquet
   * page/column-index skipping via the filter predicate set below.
   */
@@ -67,7 +66,8 @@ private[sources] object NatsVectorized {
     // hadoop conf (no SQLConf default fallback) and "null".toBoolean throws
     conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
     // page/column-index skipping only; record-level filtering is the
-    // residual Filter's job (and is unsupported in vectorized decode)
+    // residual Filter's or the stream's row view's job (and is unsupported
+    // in vectorized decode)
     conf.set("parquet.filter.record-level.enabled", "false")
     pred.foreach(ParquetInputFormat.setFilterPredicate(conf, _))
     val reader = new VectorizedParquetRecordReader(
@@ -148,9 +148,8 @@ final class NatsNativeColumnarReader(p: NatsScanPartition,
 
 /** Columnar reader for the FIXTURE layout (`events.parquet`): decodes the
   * raw columns vectorized, then builds the envelope vectors in one compiled
-  * per-batch pass — the columnar analog of [[NatsScanReader]]'s per-row
-  * mapping (seq = event_id+1, ts_nats µs = ts (already µs), subject =
-  * events.<event_type>.<user_id>, payload = props bytes). */
+  * per-batch pass (seq = event_id+1, ts_nats µs = ts (already µs),
+  * subject = events.<event_type>.<user_id>, payload = props bytes). */
 final class NatsFixtureColumnarReader(p: NatsScanPartition,
                                       required: StructType, stream: String,
                                       seqLo: Long, seqHi: Long,

@@ -2,17 +2,11 @@ package graft.sources
 
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.FilterApi
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.vectorized.ColumnarBatch
 
 /** Physical scan: one InputPartition per parquet row group, each reader a
   * bounded pull over its byte range (the distributed analog of the
@@ -20,8 +14,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Plan-time pruning: row groups whose event_id / ts statistics fall outside
   * the pushed seq/ts bounds are never planned at all; record-level residue is
-  * re-checked per message in the reader (gap-skip analog :725-729 is a no-op
-  * on columnar storage).
+  * Spark's residual Filter over the decoded batches (gap-skip analog
+  * :725-729 is a no-op on columnar storage).
   */
 final class NatsScanScan(file: String, dir: String, stream: String,
                          required: StructType,
@@ -141,9 +135,8 @@ final class NatsScanScan(file: String, dir: String, stream: String,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new NatsScanReaderFactory(required, seqLo, seqHi, tsLoNs, tsHiNs,
-      subjectContains, subjectPrefixes, stream, pushedLimit,
-      assertSeqOrder = assertSeqOrder)
+    new NatsScanReaderFactory(required, seqLo, seqHi, tsLoNs, tsHiNs, stream,
+      pushedLimit, assertSeqOrder = assertSeqOrder)
 }
 
 final case class NatsScanPartition(file: String, rangeStart: Long,
@@ -226,41 +219,55 @@ private[sources] object TsBounds {
 
 final class NatsScanReaderFactory(required: StructType, seqLo: Long,
                                   seqHi: Long, tsLoNs: Long, tsHiNs: Long,
-                                  subjectContains: List[String],
-                                  subjectPrefixes: List[String], stream: String,
+                                  stream: String,
                                   pushedLimit: Option[Int] = None,
                                   assertSeqOrder: Boolean = false)
     extends PartitionReaderFactory {
-  def this(required: StructType, seqLo: Long, seqHi: Long, tsLoNs: Long,
-           tsHiNs: Long, subjectContains: List[String], stream: String) =
-    this(required, seqLo, seqHi, tsLoNs, tsHiNs, subjectContains, Nil, stream)
+
+  private val seqIdx: Int = required.fieldNames.indexOf("seq")
 
   /** seq ordinal in the output when the top-n monotonicity assertion is on
     * (-1 = off). A top-n on seq always projects seq, but stay defensive. */
-  private val seqCheckIdx: Int =
-    if (assertSeqOrder) required.fieldNames.indexOf("seq") else -1
+  private val seqCheckIdx: Int = if (assertSeqOrder) seqIdx else -1
 
+  /** Row view over [[createColumnarReader]], for the micro-batch stream
+    * (batch scans read columnar). It keeps a row only when its seq is
+    * non-null and inside [seqLo, seqHi]: the stream has no residual Filter
+    * above it, so this per-row check is what makes a micro-batch hold
+    * exactly its offset range. The check assumes no order — part files
+    * ascend by seq only where the [[StoreLayout]] marker vouches for it. */
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val part = p.asInstanceOf[NatsScanPartition]
-    val inner =
-      if (part.native)
-        new NatsNativeReader(part, required, seqLo, seqHi, tsLoNs, tsHiNs,
-          subjectContains, subjectPrefixes, stream)
-      else
-        new NatsScanReader(part, required, seqLo, seqHi, tsLoNs, tsHiNs,
-          subjectContains, subjectPrefixes, stream)
-    pushedLimit.fold(inner: PartitionReader[InternalRow])(
-      new LimitedRowReader(inner, _, seqCheckIdx))
+    val batches = createColumnarReader(p)
+    new PartitionReader[InternalRow] {
+      private var batch: ColumnarBatch = _
+      private var row = -1
+      override def next(): Boolean = {
+        while (true) {
+          row += 1
+          while (batch == null || row >= batch.numRows()) {
+            if (!batches.next()) return false
+            batch = batches.get()
+            row = 0
+          }
+          val seq = batch.column(seqIdx)
+          if (!seq.isNullAt(row) && seq.getLong(row) >= seqLo &&
+              seq.getLong(row) <= seqHi) return true
+        }
+        false
+      }
+      override def get(): InternalRow = batch.getRow(row)
+      override def close(): Unit = batches.close()
+    }
   }
 
-  /** Batch scans decode vectorized (see [[NatsVectorized]]); subject/seq/ts
-    * residue is Spark's job (the builder keeps every pushed predicate
-    * residual). The row readers above remain the streaming path, which
-    * constructs them directly and relies on their record-level filters. */
+  /** Every read decodes vectorized (see [[NatsVectorized]]). For batch
+    * scans the subject/seq/ts residue is Spark's job (the builder keeps
+    * every pushed predicate residual); the stream's row view above trims
+    * its seq range itself. */
   override def supportColumnarReads(p: InputPartition): Boolean = true
 
   override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+      : PartitionReader[ColumnarBatch] = {
     val part = p.asInstanceOf[NatsScanPartition]
     val inner =
       if (part.native)
@@ -269,18 +276,17 @@ final class NatsScanReaderFactory(required: StructType, seqLo: Long,
       else
         new NatsFixtureColumnarReader(part, required, stream, seqLo, seqHi,
           tsLoNs, tsHiNs)
-    pushedLimit.fold(
-      inner: PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch])(
+    pushedLimit.fold(inner: PartitionReader[ColumnarBatch])(
       new LimitedColumnarReader(inner, _, seqCheckIdx))
   }
 }
 
-/** Early-stop decorators for a PARTIALLY pushed LIMIT: the source may emit
+/** Early-stop decorator for a PARTIALLY pushed LIMIT: the source may emit
   * at most ~limit rows per partition and Spark's own Local/GlobalLimit
   * above the scan enforces the exact count — so stopping is purely an I/O
-  * and decode saving, never a correctness lever. The columnar variant stops
-  * at the first batch boundary at-or-after the limit (truncating mid-batch
-  * would buy nothing: the batch is already decoded).
+  * and decode saving, never a correctness lever. It stops at the first
+  * batch boundary at-or-after the limit (truncating mid-batch would buy
+  * nothing: the batch is already decoded).
   *
   * `seqIdx >= 0` arms the TOP-N monotonicity assertion: when the limit hint
   * came from pushTopN, "first rows = lowest seqs" is a correctness
@@ -296,31 +302,9 @@ private object SeqOrderCheck {
         s"recompact")
 }
 
-private final class LimitedRowReader(inner: PartitionReader[InternalRow],
-                                     limit: Int, seqIdx: Int = -1)
-    extends PartitionReader[InternalRow] {
-  private var emitted = 0
-  private var prevSeq = Long.MinValue
-  override def next(): Boolean =
-    emitted < limit && inner.next() && {
-      if (seqIdx >= 0) {
-        val r = inner.get()
-        if (!r.isNullAt(seqIdx)) {
-          val s = r.getLong(seqIdx)
-          if (s < prevSeq) SeqOrderCheck.fail(s, prevSeq)
-          prevSeq = s
-        }
-      }
-      emitted += 1; true
-    }
-  override def get(): InternalRow = inner.get()
-  override def close(): Unit = inner.close()
-}
-
 private final class LimitedColumnarReader(
-    inner: PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch],
-    limit: Int, seqIdx: Int = -1)
-    extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
+    inner: PartitionReader[ColumnarBatch], limit: Int, seqIdx: Int = -1)
+    extends PartitionReader[ColumnarBatch] {
   private var emitted = 0L
   private var prevSeq = Long.MinValue
   override def next(): Boolean =
@@ -340,199 +324,6 @@ private final class LimitedColumnarReader(
       }
       emitted += b.numRows(); true
     }
-  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch =
-    inner.get()
+  override def get(): ColumnarBatch = inner.get()
   override def close(): Unit = inner.close()
-}
-
-/** Reader for the native message store (part files written by
-  * [[NatsScanBatchWrite]]): envelope columns read verbatim, record filters
-  * applied directly on seq / ts_nats (µs). */
-final class NatsNativeReader(p: NatsScanPartition, required: StructType,
-                             seqLo: Long, seqHi: Long, tsLoNs: Long,
-                             tsHiNs: Long, subjectContains: List[String],
-                             subjectPrefixes: List[String], stream: String)
-    extends PartitionReader[InternalRow] {
-
-  private val needed: Set[String] = required.fieldNames.toSet
-
-  private val tsLoUs =
-    if (tsLoNs == Long.MinValue) Long.MinValue else Math.floorDiv(tsLoNs + 999L, 1000L)
-  private val tsHiUs =
-    if (tsHiNs == Long.MaxValue) Long.MaxValue else Math.floorDiv(tsHiNs, 1000L)
-
-  private val parquetCols: Seq[String] = {
-    val cols = Seq("subject", "seq", "ts_nats", "payload").filter(needed.contains)
-    val extra =
-      (if (seqLo > 1L || seqHi < Long.MaxValue) Seq("seq") else Nil) ++
-      (if (tsLoUs > Long.MinValue || tsHiUs < Long.MaxValue) Seq("ts_nats") else Nil) ++
-      (if (subjectContains.nonEmpty) Seq("subject") else Nil)
-    (cols ++ extra).distinct
-  }
-
-  private val reader: ParquetReader[org.apache.parquet.example.data.Group] = {
-    val conf = new Configuration()
-    if (parquetCols.nonEmpty) {
-      val fields = parquetCols.map {
-        case "subject" => "optional binary subject (STRING);"
-        case "seq" => "optional int64 seq;"
-        case "ts_nats" => "optional int64 ts_nats (TIMESTAMP(MICROS,true));"
-        case "payload" => "optional binary payload;"
-      }.mkString("\n")
-      conf.set("parquet.read.schema", s"message nats_envelope {\n$fields\n}")
-    }
-    var pred: org.apache.parquet.filter2.predicate.FilterPredicate = null
-    def and(p2: org.apache.parquet.filter2.predicate.FilterPredicate): Unit =
-      pred = if (pred == null) p2 else FilterApi.and(pred, p2)
-    val sc = FilterApi.longColumn("seq")
-    val tc = FilterApi.longColumn("ts_nats")
-    if (seqLo > 1L) and(FilterApi.gtEq(sc, java.lang.Long.valueOf(seqLo)))
-    if (seqHi < Long.MaxValue) and(FilterApi.ltEq(sc, java.lang.Long.valueOf(seqHi)))
-    if (tsLoUs > Long.MinValue) and(FilterApi.gtEq(tc, java.lang.Long.valueOf(tsLoUs)))
-    if (tsHiUs < Long.MaxValue) and(FilterApi.ltEq(tc, java.lang.Long.valueOf(tsHiUs)))
-    var b = ParquetReader
-      .builder(new GroupReadSupport(), new Path(p.file))
-      .withConf(conf)
-      .withFileRange(p.rangeStart, p.rangeEnd)
-    if (pred != null) b = b.withFilter(FilterCompat.get(pred))
-    b.build()
-  }
-
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (true) {
-      val g = reader.read()
-      if (g == null) return false
-      val row = toRow(g)
-      if (row != null) { current = row; return true }
-    }
-    false
-  }
-
-  private def toRow(g: org.apache.parquet.example.data.Group): InternalRow = {
-    def has(c: String): Boolean = g.getType.containsField(c) &&
-      g.getFieldRepetitionCount(c) > 0
-    lazy val subject: String = if (has("subject")) g.getString("subject", 0) else null
-    if ((subjectContains.nonEmpty || subjectPrefixes.nonEmpty) &&
-        (subject == null || !subjectContains.forall(subject.contains(_)) ||
-          !subjectPrefixes.forall(subject.startsWith(_))))
-      return null
-    val vals = required.fieldNames.map {
-      case "stream" => UTF8String.fromString(stream)
-      case "subject" => if (subject == null) null else UTF8String.fromString(subject)
-      case "seq" => if (has("seq")) g.getLong("seq", 0) else null
-      case "ts_nats" => if (has("ts_nats")) g.getLong("ts_nats", 0) else null
-      case "payload" => if (has("payload")) g.getBinary("payload", 0).getBytes else null
-      case other => sys.error(s"unknown envelope column $other")
-    }
-    InternalRow.fromSeq(vals.toIndexedSeq)
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
-}
-
-/** Per-partition reader: parquet Group API over the partition's byte range,
-  * with record-level seq/ts filters delegated to parquet (page skipping) and
-  * only the parquet columns backing the required envelope columns read. */
-final class NatsScanReader(p: NatsScanPartition, required: StructType,
-                           seqLo: Long, seqHi: Long, tsLoNs: Long,
-                           tsHiNs: Long, subjectContains: List[String],
-                           subjectPrefixes: List[String], stream: String)
-    extends PartitionReader[InternalRow] {
-
-  private val needed: Set[String] = required.fieldNames.toSet
-  private val parquetCols: Seq[String] = {
-    val m = Seq(
-      "subject" -> Seq("event_type", "user_id"),
-      "seq" -> Seq("event_id"),
-      "ts_nats" -> Seq("ts"),
-      "payload" -> Seq("props"))
-    val cols = m.collect { case (env, pc) if needed.contains(env) => pc }.flatten
-    // always keep event_id/ts when a bound is pushed, for the record filter
-    val extra =
-      (if (seqLo > 1L || seqHi < Long.MaxValue) Seq("event_id") else Nil) ++
-      (if (tsLoNs > Long.MinValue || tsHiNs < Long.MaxValue) Seq("ts") else Nil)
-    (cols ++ extra).distinct
-  }
-
-  private val reader: ParquetReader[org.apache.parquet.example.data.Group] = {
-    val conf = new Configuration()
-    val projection =
-      if (parquetCols.isEmpty) None
-      else Some {
-        val fields = parquetCols.map {
-          case "event_id" => "optional int64 event_id;"
-          case "ts" => "optional int64 ts (TIMESTAMP(MICROS,false));"
-          case "user_id" => "optional int64 user_id;"
-          case "event_type" => "optional binary event_type (STRING);"
-          case "props" => "optional binary props (STRING);"
-        }.mkString("\n")
-        s"message spark_schema {\n$fields\n}"
-      }
-    projection.foreach(s => conf.set("parquet.read.schema", s))
-
-    var pred: org.apache.parquet.filter2.predicate.FilterPredicate = null
-    def and(p2: org.apache.parquet.filter2.predicate.FilterPredicate): Unit =
-      pred = if (pred == null) p2 else FilterApi.and(pred, p2)
-    val idc = FilterApi.longColumn("event_id")
-    // fixture ts is int64 µs (TIMESTAMP(MICROS)); the ns bounds convert
-    // exactly: ts_ns = µs·1000 ∈ [lo, hi] ⟺ µs ∈ [⌈lo/1000⌉, ⌊hi/1000⌋]
-    val tsc = FilterApi.longColumn("ts")
-    if (seqLo > 1L) and(FilterApi.gtEq(idc, java.lang.Long.valueOf(seqLo - 1)))
-    if (seqHi < Long.MaxValue) and(FilterApi.ltEq(idc, java.lang.Long.valueOf(seqHi - 1)))
-    if (tsLoNs > Long.MinValue)
-      and(FilterApi.gtEq(tsc, java.lang.Long.valueOf(TsBounds.loUs(tsLoNs))))
-    if (tsHiNs < Long.MaxValue)
-      and(FilterApi.ltEq(tsc, java.lang.Long.valueOf(TsBounds.hiUs(tsHiNs))))
-
-    var b = ParquetReader
-      .builder(new GroupReadSupport(), new Path(p.file))
-      .withConf(conf)
-      .withFileRange(p.rangeStart, p.rangeEnd)
-    if (pred != null) b = b.withFilter(FilterCompat.get(pred))
-    b.build()
-  }
-
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    while (true) {
-      val g = reader.read()
-      if (g == null) return false
-      val row = toRow(g)
-      if (row != null) { current = row; return true }
-    }
-    false
-  }
-
-  private def toRow(g: org.apache.parquet.example.data.Group): InternalRow = {
-    def has(c: String): Boolean = g.getType.containsField(c) &&
-      g.getFieldRepetitionCount(c) > 0
-    // subject substring filter (reference semantics: substring, not wildcard,
-    // /root/reference/src/nats_scan.cpp:741-746)
-    lazy val subject: String =
-      if (has("event_type") && has("user_id"))
-        s"events.${g.getString("event_type", 0)}.${g.getLong("user_id", 0)}"
-      else null
-    if ((subjectContains.nonEmpty || subjectPrefixes.nonEmpty) &&
-        (subject == null || !subjectContains.forall(subject.contains(_)) ||
-          !subjectPrefixes.forall(subject.startsWith(_))))
-      return null
-    val vals = required.fieldNames.map {
-      case "stream" => UTF8String.fromString(stream)
-      case "subject" => if (subject == null) null else UTF8String.fromString(subject)
-      case "seq" => if (has("event_id")) g.getLong("event_id", 0) + 1L else null
-      case "ts_nats" =>
-        if (has("ts")) g.getLong("ts", 0) else null // already µs
-      case "payload" =>
-        if (has("props")) g.getString("props", 0).getBytes("UTF-8") else null
-      case other => sys.error(s"unknown envelope column $other")
-    }
-    InternalRow.fromSeq(vals.toIndexedSeq)
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = reader.close()
 }

@@ -16,7 +16,8 @@ import graft.sources.{NatsScanPartition, NatsScanReaderFactory, NatsScanSource, 
   * durable consumer would give a live NATS deployment.
   *
   * Each micro-batch serves the seq range (lastOffset, thisOffset] through the
-  * same partition readers as the batch source; `max_msgs_per_batch` caps
+  * same columnar readers as the batch source, trimmed to that range per row
+  * ([[NatsScanReaderFactory.createReader]]); `max_msgs_per_batch` caps
   * batch size (backpressure knob, like JetStream pull-consumer batch sizes).
   *
   * Offset discovery lists the store once per poll; footer statistics come
@@ -131,7 +132,7 @@ final class StreamReaderFactory(stream: String) extends PartitionReaderFactory {
   override def createReader(p: InputPartition) = {
     val b = p.asInstanceOf[StreamBatch]
     new NatsScanReaderFactory(NatsScanSource.envelopeSchema, b.seqLo, b.seqHi,
-      Long.MinValue, Long.MaxValue, Nil, stream)
+      Long.MinValue, Long.MaxValue, stream)
       .createReader(NatsScanPartition(b.file, 0L, Long.MaxValue, b.native))
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -402,5 +404,52 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(spark.table("tail_footers").select("seq").collect()
         .map(_.getLong(0)).sorted.toSeq == (1L to 350L))
     } finally q.stop()
+  }
+
+  test("every micro-batch holds exactly its seq range when a part file is " +
+    "not seq-sorted and batch edges fall mid-file") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft_unsorted_tail").toString
+    val n = 1000L
+    // one part file in shuffled seq order through a plain parquet write:
+    // no layout marker vouches for its order
+    val tsType = "spark.sql.parquet.outputTimestampType"
+    val prevTsType = spark.conf.get(tsType)
+    spark.conf.set(tsType, "TIMESTAMP_MICROS")
+    try new scala.util.Random(7).shuffle((1L to n).toVector).toDF("seq")
+      .coalesce(1)
+      .select(lit("events.k").as("subject"), col("seq"),
+        timestamp_micros(col("seq") * 1000000L).as("ts_nats"),
+        col("seq").cast("string").cast("binary").as("payload"))
+      .write.parquet(s"$tmp/events.msgs")
+    finally spark.conf.set(tsType, prevTsType)
+    val store = new java.io.File(s"$tmp/events.msgs")
+    assert(!graft.sources.StoreLayout.seqSorted(store))
+    val fileOrder = spark.read.parquet(store.getPath).select("seq").collect()
+      .map(_.getLong(0)).toSeq
+    assert(fileOrder.sorted == (1L to n) && fileOrder != fileOrder.sorted,
+      "the part file must hold every seq once, out of order")
+    val got = new java.util.concurrent.ConcurrentHashMap[Long, Seq[Long]]()
+    val sink: (org.apache.spark.sql.DataFrame, Long) => Unit = (df, id) => {
+      val _ = got.put(id, df.select("seq").collect().map(_.getLong(0)).toSeq)
+    }
+    val q = spark.readStream.format("nats_scan").option("dir", tmp)
+      .option("max_msgs_per_batch", "150").load()
+      .writeStream.foreachBatch(sink)
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(120000)
+    val batches = q.recentProgress.filter(_.numInputRows > 0).toSeq
+    val sizes = batches.map(_.numInputRows)
+    assert(sizes.length == 7, s"1000 msgs at 150 per batch: ${sizes.mkString(",")}")
+    batches.foreach { p =>
+      val src = p.sources.head
+      val start = Option(src.startOffset).fold(0L)(_.toLong)
+      val end = src.endOffset.toLong
+      val seqs = got.get(p.batchId)
+      assert(seqs.sorted == ((start + 1) to end),
+        s"batch ${p.batchId} ($start, $end] held ${seqs.sorted.mkString(",")}")
+      assert(p.numInputRows == end - start)
+    }
+    assert(got.values.asScala.flatten.toSeq.sorted == (1L to n))
   }
 }
