@@ -1,5 +1,6 @@
 package graft
 
+import graft.fs.{NioLocalFileSystem, NioLocalFs}
 import org.apache.spark.sql.SparkSession
 
 /** The MEASURED deployment profile — single source of truth for the
@@ -20,6 +21,11 @@ import org.apache.spark.sql.SparkSession
   *     (round 8 judge's root cause).
   *   - NO `-Xms` preallocation: measured neutral-to-negative for this
   *     workload (round 10) — let the heap grow.
+  *   - `fs.file.impl` / `fs.AbstractFileSystem.file.impl` (Hadoop conf,
+  *     set as `spark.hadoop.*`): the `graft.fs` local filesystem, which
+  *     sets permissions and resolves links through java.nio instead of
+  *     forking `chmod`/`readlink` per file — about 9 ms per file create
+  *     and 27 ms per FileContext rename on the stock class.
   *
   * The session half applies through [[configure]]; the JVM half cannot be
   * set at runtime, so [[jvmWarnings]] audits the running JVM and returns
@@ -41,6 +47,8 @@ object DeploymentProfile {
   def configure(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.codegen.cache.maxEntries",
       CodegenCacheMaxEntries.toString)
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
   /** audit the RUNNING JVM against the flag half of the profile; returns
     * one line per deviation (empty = compliant) */

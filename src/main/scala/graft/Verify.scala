@@ -7,18 +7,16 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    // session half of the measured deployment profile (see
+    // DeploymentProfile / docs/DEPLOYMENT.md)
+    val spark = DeploymentProfile.configure(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // SQL surface: makes `FROM nats_scan(...)` and the proto/similarity
       // SQL functions resolvable in the graded session
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // session half of the measured deployment profile (codegen compile
-      // cache sizing — see DeploymentProfile / docs/DEPLOYMENT.md)
-      .config("spark.sql.codegen.cache.maxEntries",
-        DeploymentProfile.CodegenCacheMaxEntries.toString)
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
