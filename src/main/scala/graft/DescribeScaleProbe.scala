@@ -22,10 +22,11 @@ object DescribeScaleProbe {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val k = args.headOption.map(_.toInt).getOrElse(10)
     val reps = args.drop(1).headOption.map(_.toInt).getOrElse(5)
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = DeploymentProfile.configure(SparkSession.builder()
+      .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false"))
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -169,13 +169,18 @@ object IndexMaintainer {
     require(dirs.nonEmpty,
       "usage: IndexMaintainer [--interval-s N | --once] [--retain N] " +
         "indexDir...")
-    val spark = SparkSession.builder()
-      .appName("graft-index-maintainer")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", false)
-      .getOrCreate()
+    val spark = sessionBuilder().getOrCreate()
     val code = try run(spark, dirs, intervalS, retain) finally spark.stop()
     if (code != 0) sys.exit(code)
   }
+
+  /** the maintainer JVM's session, built through the deployment profile so
+    * its compactions write part files, `.crc` files and markers without
+    * forking a process per file */
+  private[graft] def sessionBuilder(): SparkSession.Builder =
+    DeploymentProfile.configure(SparkSession.builder()
+      .appName("graft-index-maintainer")
+      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
+      .config("spark.sql.shuffle.partitions", 32)
+      .config("spark.ui.enabled", false))
 }

@@ -3,10 +3,12 @@ import org.apache.spark.sql.SparkSession
 object TimeProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = DeploymentProfile.configure(SparkSession.builder()
+      .master("local[32]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions").getOrCreate()
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions"))
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     try Bench.materialize(SparkEntry.entry(spark)) catch { case _: Throwable => () }
     args.foreach { name =>

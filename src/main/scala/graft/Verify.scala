@@ -4,6 +4,18 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** a failure's whole cause chain, one class and message per cause, then
+    * the root cause's top frames: an INTERNAL_ERROR's message alone names
+    * only the phase that failed, not what failed in it */
+  def causeChain(e: Throwable): String = {
+    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .take(32).toSeq
+    chain.map(c => s"${c.getClass.getName}: ${c.getMessage}")
+      .mkString("\n  caused by: ") +
+      chain.last.getStackTrace.take(12).map(f => s"\n    at $f").mkString
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -37,7 +49,7 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${causeChain(e)}")
         rmrf(new java.io.File(s"$outDir/$name"))
       }
       // release the query's intermediate caches/checkpoints before the next

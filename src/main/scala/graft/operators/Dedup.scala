@@ -27,34 +27,59 @@ object Dedup {
     df.groupBy(md5(col(contentCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Per-doc MinHash signatures: (id, sig array<long>). */
+  /** Per-doc MinHash signatures of the signable docs: (id, sig array<long>). */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 16): DataFrame =
-    df.select(col(idCol), tokens(col(textCol)).as("w"))
-      .filter(size(col("w")) >= 3)
-      .withColumn("sh", wordShingles3("w"))
-      .select(col(idCol), minhashSignature("sh", numHashes).as("sig"))
+    withMinhashSignature(df.select(col(idCol), col(textCol)), textCol,
+      numHashes, "sig")
+      .where(col("sig").isNotNull)
+      .select(col(idCol), col("sig"))
+
+  /** `df` with each row's MinHash signature appended as `sigCol`: NULL for a
+    * doc too short to sign (< 3 tokens, no shingles). For callers that need
+    * the documents and their signatures in one relation (the streaming gate
+    * caches this once per batch). */
+  def withMinhashSignature(df: DataFrame, textCol: String, numHashes: Int,
+                           sigCol: String): DataFrame =
+    df.withColumn("__w", tokens(col(textCol)))
+      .withColumn("__sh", when(size(col("__w")) >= 3, wordShingles3("__w")))
+      .withColumn(sigCol, minhashSignature("__sh", numHashes))
+      .drop("__w", "__sh")
 
   /** LSH band keys from signatures: (id, band, band_key). */
   def minhashBands(sigDf: DataFrame, idCol: String,
-                   numHashes: Int, bands: Int): DataFrame = {
+                   numHashes: Int, bands: Int): DataFrame =
+    minhashBandsWithSig(sigDf, idCol, numHashes, bands).drop("sig")
+
+  /** [[minhashBands]] with each row's `sig` carried along:
+    * (id, band, band_key, sig) — for joins that verify a candidate pair in
+    * the join itself instead of joining the signatures back afterwards. */
+  def minhashBandsWithSig(sigDf: DataFrame, idCol: String,
+                          numHashes: Int, bands: Int): DataFrame = {
     val rows = numHashes / bands
     sigDf
       .select(col(idCol), col("sig"),
         explode(sequence(lit(0), lit(bands - 1))).as("band"))
       .select(col(idCol), col("band"),
         expr(s"array_join(transform(slice(sig, band * $rows + 1, $rows), " +
-          "x -> CAST(x AS STRING)), ',')").as("band_key"))
+          "x -> CAST(x AS STRING)), ',')").as("band_key"), col("sig"))
   }
+
+  /** estimated Jaccard of two signature columns: the share of agreeing
+    * positions */
+  def estJaccard(s1: Column, s2: Column, numHashes: Int): Column =
+    size(filter(zip_with(s1, s2, (x, y) => x === y), v => v))
+      .cast("double") / lit(numHashes.toDouble)
 
   /** MinHash-LSH candidate pairs with estimated Jaccard ≥ `minEst`.
     *
     * Topology: signatures materialize once (persisted signature table at
-    * cluster scale); candidate generation self-joins the NARROW (id, band,
-    * band_key) relation and dedups on bare (id1, id2) — the wide signature
-    * arrays never enter the candidate shuffle, they are joined back only for
-    * the surviving pairs. Shuffle key is (band, band_key) — no all-pairs
-    * product anywhere. */
+    * cluster scale); candidate generation self-joins the (id, band,
+    * band_key, sig) relation on the band key and verifies each colliding
+    * pair IN the join, so the signatures are read once per band row instead
+    * of joined back twice per candidate. Shuffle key is (band, band_key) —
+    * no all-pairs product anywhere; a pair colliding in several bands is
+    * verified once per band and deduplicated by the final distinct. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 16, bands: Int = 4,
                       minEst: Double = 0.5): DataFrame =
@@ -71,20 +96,17 @@ object Dedup {
   def minhashLshPairsFromSignatures(sigDf: DataFrame, idCol: String,
                                     numHashes: Int, bands: Int,
                                     minEst: Double): DataFrame = {
-    val b = minhashBands(sigDf, idCol, numHashes, bands)
-    val cand = b.select(col(idCol).as("id1"), col("band"), col("band_key"))
-      .join(b.select(col(idCol).as("id2"), col("band"), col("band_key")),
-        Seq("band", "band_key"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2").distinct()
-    cand
-      .join(sigDf.select(col(idCol).as("id1"), col("sig").as("s1")), "id1")
-      .join(sigDf.select(col(idCol).as("id2"), col("sig").as("s2")), "id2")
-      .withColumn("est_jaccard",
-        expr("CAST(size(filter(zip_with(s1, s2, (x, y) -> x = y), v -> v)) AS DOUBLE)" +
-          s" / CAST($numHashes AS DOUBLE)"))
-      .filter(col("est_jaccard") >= minEst)
-      .select("id1", "id2", "est_jaccard")
+    val b = minhashBandsWithSig(sigDf, idCol, numHashes, bands)
+    val l = b.select(col(idCol).as("id1"), col("band"), col("band_key"),
+      col("sig").as("s1"))
+    val r = b.select(col(idCol).as("id2"), col("band").as("band2"),
+      col("band_key").as("band_key2"), col("sig").as("s2"))
+    val est = estJaccard(col("s1"), col("s2"), numHashes)
+    l.join(r, col("band") === col("band2") &&
+        col("band_key") === col("band_key2") &&
+        col("id1") < col("id2") && est >= minEst)
+      .select(col("id1"), col("id2"), est.as("est_jaccard"))
+      .distinct()
   }
 
   /** LSH parameter sweep: for each band count in `bandConfigs`, measure
@@ -202,9 +224,7 @@ object Dedup {
     cand
       .join(sigNew.select(col(idCol).as("new_id"), col("sig").as("s1")), "new_id")
       .join(sigIdx.select(col(idCol).as("index_id"), col("sig").as("s2")), "index_id")
-      .withColumn("est_jaccard",
-        expr("CAST(size(filter(zip_with(s1, s2, (x, y) -> x = y), v -> v)) AS DOUBLE)" +
-          s" / CAST($numHashes AS DOUBLE)"))
+      .withColumn("est_jaccard", estJaccard(col("s1"), col("s2"), numHashes))
       .filter(col("est_jaccard") >= minEst)
       .select("new_id", "index_id", "est_jaccard")
   }
@@ -313,37 +333,23 @@ object Dedup {
     // release a superseded round's blocks immediately (local mode only;
     // reliable-checkpoint files are removed by the cleaner / dir teardown)
     def release(df: DataFrame): Unit = if (!reliable) graft.Caches.free(df)
-    // materialize the (possibly expensive) pair input ONCE — the edge-set
-    // construction below references it several times (both directions +
-    // node extraction), and each reference would otherwise re-run the
-    // upstream pair-generation join
     val p0 = pairs.select(col(leftCol).as("a"), col(rightCol).as("b"))
-    // integral keys take the guard count() below as the checkpoint's
-    // materializing action (lazy local checkpoint + count = ONE job where
-    // eager-checkpoint-then-count was two; count() computes every
-    // partition, so all blocks land before any later consumer). Lazy is
-    // unsafe only when the FIRST action references the plan twice — the
-    // non-integral path's first consumer is the two-branch union, so it
-    // keeps the eager materialization.
-    val integralInput = {
-      def integral0(t: org.apache.spark.sql.types.DataType) =
-        t == org.apache.spark.sql.types.LongType ||
-          t == org.apache.spark.sql.types.IntegerType
-      integral0(p0.schema("a").dataType) && integral0(p0.schema("b").dataType)
-    }
-    val p = chk(p0, eager = !integralInput)
+    // reliable mode writes the pair input to the DFS before anything reads
+    // it, fast path included; local mode checkpoints it only when the
+    // distributed path below needs it
+    val pIn = if (reliable) chk(p0) else p0
     // SMALL-GRAPH FAST PATH: iterative propagation pays per-round
     // short-stage overhead (job launch + tiny shuffle + checkpoint) that
     // dominates when the surviving pair set is small — the common case for
     // residual cross-split pairs after index-probe dedup, where a handful
     // of pairs still cost O(log diameter) Spark rounds. Below the bound the
-    // exact same min-label result comes from one driver union-find over the
-    // already-checkpointed pairs: a BOUNDED collect (≤ smallGraphThreshold
-    // narrow id pairs — an explicit model-size cap, never corpus-scale; the
-    // count that guards it is a cheap aggregate over p's cached blocks).
+    // exact same min-label result comes from one driver union-find over ONE
+    // bounded collect: at most `bound + 1` narrow id pairs (an explicit
+    // model-size cap, never corpus-scale); a collect that returns more
+    // rows than the bound falls through to the distributed path.
     // Integral keys only; other key types keep the distributed path.
-    val typeA = p.schema("a").dataType
-    val typeB = p.schema("b").dataType
+    val typeA = p0.schema("a").dataType
+    val typeB = p0.schema("b").dataType
     def integral(t: org.apache.spark.sql.types.DataType) =
       t == org.apache.spark.sql.types.LongType ||
         t == org.apache.spark.sql.types.IntegerType
@@ -354,18 +360,21 @@ object Dedup {
           typeB == org.apache.spark.sql.types.LongType)
         org.apache.spark.sql.types.LongType
       else typeA
-    // the guard caps BOTH rows and estimated driver bytes (round-12 judge
+    // the bound caps BOTH rows and estimated driver bytes (round-12 judge
     // task 5): keys are integral-only here, so the per-pair driver
     // footprint is statically bounded — a collected GenericRow of two
     // boxed longs costs ≈64 B (row object + backing array + 2 boxes) —
-    // and bytes = count × 64 needs no row-width sampling. The byte cap
+    // and bytes = rows × 64 needs no row-width sampling. The byte cap
     // exists so callers who RAISE smallGraphThreshold cannot silently buy
     // an unbounded driver collect.
-    val pairCount =
-      if (integralInput) p.count() else Long.MaxValue
-    if (pairCount <= smallGraphThreshold &&
-        pairCount * 64L <= smallGraphMaxBytes) {
-      val rows = p.collect()
+    val bound = math.min(math.min(smallGraphThreshold, smallGraphMaxBytes / 64L),
+      Int.MaxValue - 1L)
+    val collected =
+      if (integral(typeA) && integral(typeB) && bound >= 0)
+        Some(pIn.limit(bound.toInt + 1).collect()).filter(_.length <= bound)
+      else None
+    if (collected.isDefined) {
+      val rows = collected.get
       // each column read with ITS OWN accessor — a mixed Int/Long pair
       // input must not ClassCastException (it widens, like the union above)
       def id(r: org.apache.spark.sql.Row, i: Int,
@@ -407,8 +416,6 @@ object Dedup {
       }
       val nodes = (edges.iterator.flatMap(e => Iterator(e._1, e._2)) ++
         nullPartners.iterator).toArray.distinct
-      release(p)
-      val spark = pairs.sparkSession
       val out = nodes.iterator.map { n =>
         org.apache.spark.sql.Row(java.lang.Long.valueOf(n),
           java.lang.Long.valueOf(find(n)))
@@ -421,10 +428,17 @@ object Dedup {
           org.apache.spark.sql.types.LongType, nullable = true),
         org.apache.spark.sql.types.StructField("lbl",
           org.apache.spark.sql.types.LongType, nullable = true)))
-      return spark.createDataFrame(
-        spark.sparkContext.parallelize(out.toSeq, 1), schema)
+      // a driver-side LocalRelation: its size is known at plan time, and
+      // collecting or broadcasting it runs no Spark job
+      import scala.jdk.CollectionConverters._
+      return pairs.sparkSession.createDataFrame(out.toSeq.asJava, schema)
         .select(col("node").cast(keyType), col("lbl").cast(keyType))
     }
+    // materialize the (possibly expensive) pair input ONCE — the edge-set
+    // construction below references it several times (both directions +
+    // node extraction), and each reference would otherwise re-run the
+    // upstream pair-generation join
+    val p = if (reliable) pIn else chk(p0)
     // both directions + a self-loop per node: the per-round neighbor-min
     // then already includes the node's own label, so the loop body is pure
     // join+aggregate (no Union over checkpointed plans, which trips

@@ -254,8 +254,15 @@ object DedupIndex {
           "empty.")
   }
 
+  /** one mapper for every meta read (thread-safe once configured) */
+  private val metaMapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
   private def loadMeta(spark: SparkSession, indexDir: String): (Spec, Int) = {
     requireUnambiguous(spark, indexDir)
+    readMeta(spark, indexDir)
+  }
+
+  private def readMeta(spark: SparkSession, indexDir: String): (Spec, Int) = {
     val p = new org.apache.hadoop.fs.Path(s"$indexDir/meta")
     val f = fs(spark, indexDir)
     if (f.getFileStatus(p).isFile) {
@@ -265,7 +272,7 @@ object DedupIndex {
       val txt =
         try scala.io.Source.fromInputStream(in, "UTF-8").mkString
         finally in.close()
-      val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
+      val node = metaMapper.readTree(txt)
       (Spec(node.get("num_hashes").asInt(), node.get("bands").asInt(),
         node.get("buckets").asInt()), node.get("generation").asInt())
     } else {
@@ -371,6 +378,13 @@ object DedupIndex {
     * per-probe re-listing tax when the index is quiet. */
   def ensureRegistered(spark: SparkSession, indexDir: String): Spec = {
     val (spec, gen) = loadMeta(spark, indexDir)
+    registerAt(spark, indexDir, spec, gen)
+    spec
+  }
+
+  /** [[ensureRegistered]]'s DDL and freshness half, for a meta already read */
+  private def registerAt(spark: SparkSession, indexDir: String, spec: Spec,
+                         gen: Int): Unit = {
     def register(table: String, dataDir: String, bucketCol: String): Unit = {
       if (spark.catalog.tableExists(table)) {
         val meta = spark.sessionState.catalog.getTableMetadata(
@@ -409,8 +423,27 @@ object DedupIndex {
       spark.catalog.refreshTable(bandsTable(spark, indexDir))
       spark.catalog.refreshTable(sigsTable(spark, indexDir))
     }
-    spec
   }
+
+  /** An index as one caller saw it: hash config, live generation and the
+    * registered table names. See [[resolve]]. */
+  private[graft] final case class Resolved(spec: Spec, generation: Int,
+                                           bandsTable: String,
+                                           sigsTable: String)
+
+  /** Resolve an index ONCE for a caller that probes it and then appends to
+    * it in one call (the streaming gate): one [[requireUnambiguous]], one
+    * meta read, one catalog registration and one cross-session freshness
+    * check. None when no index has been built at `indexDir`. */
+  private[graft] def resolve(spark: SparkSession,
+                             indexDir: String): Option[Resolved] =
+    if (!exists(spark, indexDir)) None
+    else {
+      val (spec, gen) = readMeta(spark, indexDir)
+      registerAt(spark, indexDir, spec, gen)
+      Some(Resolved(spec, gen, bandsTable(spark, indexDir),
+        sigsTable(spark, indexDir)))
+    }
 
   /** COMPACTION: rewrite each table into ONE file per bucket — the
     * small-files answer for a long-lived index. Every [[append]] batch
@@ -735,8 +768,10 @@ object DedupIndex {
     appendImpl(sig, idCol, indexDir, spec)
   }
 
-  private def appendImpl(sig: DataFrame, idCol: String, indexDir: String,
-                         spec: Spec): Unit = {
+  /** the append itself, for a `spec` the caller has read and checked
+    * (the streaming gate passes its once-resolved index) */
+  private[graft] def appendImpl(sig: DataFrame, idCol: String,
+                                indexDir: String, spec: Spec): Unit = {
     val spark = sig.sparkSession
     val f = fs(spark, indexDir)
     // INTENT before any write (round 15, [[IndexCommit]]): a maintenance
@@ -789,8 +824,12 @@ object DedupIndex {
     * fragmentation signal an auto-compaction policy thresholds on (one
     * directory listing, no data read). Bucketed files carry their bucket
     * id as the `_NNNNN` filename suffix. */
-  def maxFilesPerBucket(spark: SparkSession, indexDir: String): Int = {
-    val (_, gen) = loadMeta(spark, indexDir)
+  def maxFilesPerBucket(spark: SparkSession, indexDir: String): Int =
+    maxFilesPerBucketAt(spark, indexDir, loadMeta(spark, indexDir)._2)
+
+  /** [[maxFilesPerBucket]] of a generation the caller already read */
+  private[graft] def maxFilesPerBucketAt(spark: SparkSession, indexDir: String,
+                                         gen: Int): Int = {
     val dir = new org.apache.hadoop.fs.Path(dataDir(indexDir, "bands", gen))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) 0
@@ -894,7 +933,7 @@ object DedupIndex {
       gens.mkString(","), gens.length,
       bandRows, sigRows,
       bandFiles, bandBytes, sigFiles, sigBytes,
-      maxFilesPerBucket(spark, indexDir),
+      maxFilesPerBucketAt(spark, indexDir, gen),
       IndexCommit.maintenanceDue(f, indexDir)))
       .toDF("num_hashes", "bands", "buckets", "live_generation",
         "generations_on_disk", "n_generations", "band_rows", "sig_rows",
@@ -922,8 +961,7 @@ object DedupIndex {
       .join(sigIdx.select(col("doc_id").as("index_id"),
         col("sig").as("s2")), "index_id")
       .withColumn("est_jaccard",
-        expr("CAST(size(filter(zip_with(s1, s2, (x, y) -> x = y), v -> v)) AS DOUBLE)" +
-          s" / CAST(${spec.numHashes} AS DOUBLE)"))
+        Dedup.estJaccard(col("s1"), col("s2"), spec.numHashes))
       .filter(col("est_jaccard") >= minEst)
       .select("new_id", "index_id", "est_jaccard")
   }

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, DedupIndex}
 
@@ -76,137 +76,116 @@ object StreamingDedup {
                           compactThreshold: Int = 0,
                           deferMaintenance: Boolean = false)
 
-  private def estJaccard(numHashes: Int) =
-    expr("CAST(size(filter(zip_with(s1, s2, (x, y) -> x = y), v -> v)) AS DOUBLE)" +
-      s" / CAST($numHashes AS DOUBLE)")
+  /** the gate's signature column on the cached batch (NULL for a doc too
+    * short to sign) */
+  private val SigCol = "__gate_sig"
+
+  /** The accepted corpus as the probe reads it: band rows `(bk, index_id)`
+    * under the one band-key encoding ([[DedupIndex.bk]]) and signatures
+    * `(index_id, s2)`. `resolved` is the bucketed index, resolved once per
+    * gate call; None in plain-parquet mode. */
+  private final case class Accepted(bands: DataFrame, sigs: DataFrame,
+                                    resolved: Option[DedupIndex.Resolved])
 
   /** the foreachBatch handler: `.writeStream.foreachBatch(
-    *   StreamingDedup.ingest(cfg) _)` */
+    *   StreamingDedup.ingest(cfg) _)`
+    *
+    * One batch against an existing index runs these Spark jobs (about ten;
+    * `StreamingDedupSpec` pins ≤ 13):
+    *   1. sign — the batch rows and their signatures, cached by one job,
+    *      so every later plan reads them at a size known at plan time;
+    *   2. in parallel:
+    *      - vs-index probe (3): the batch band rows broadcast into the
+    *        index band scan, the candidates broadcast into the index
+    *        signature scan and verified there, the drop ids collected;
+    *      - in-batch components (2–3): the band self-join verifies each
+    *        colliding pair in the join, the distinct pairs come back in one
+    *        bounded collect and a driver union-find labels them;
+    *   3. survivors write (1): the drop set is a driver-side id set
+    *      applied as a plan-time IN-set filter, which needs no job;
+    *   4. index extend (2): the band and signature appends, in parallel.
+    * The index is resolved once before the probe is planned (one meta
+    * read, one catalog registration); the append re-reads the generation
+    * around its write, and the marker and compaction check read no data. */
   def ingest(cfg: Config)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     if (BatchMarker.alreadyApplied(spark, cfg.indexDir, batchId)) return
-    requireLayoutMatches(spark, cfg)
-    // phase labels (optimization-guide §1.5) so the UI/probes can attribute
-    // the gate's many small jobs; thread-local, cleared at the end
+    val accepted = acceptedCorpus(spark, cfg)
+    // phase labels so the UI and traces can attribute the gate's jobs;
+    // thread-local, cleared at the end
     def label(s: String): Unit =
       spark.sparkContext.setJobDescription(s"dedup gate b$batchId: $s")
-    val b = batch.persist()
+    val signed = Dedup.withMinhashSignature(batch, cfg.textCol,
+      cfg.numHashes, SigCol).persist()
     try {
-      val sig = Dedup.minhashSignatures(b, cfg.idCol, cfg.textCol,
-        cfg.numHashes).persist()
-      val bandsNew = Dedup.minhashBands(sig, cfg.idCol, cfg.numHashes,
-        cfg.bands)
-        .select(col(cfg.idCol).as("new_id"), col("band"), col("band_key"))
+      label("sign")
+      // one job, no shuffle: reading a partition stores its cache block
+      // (count() would add an aggregate exchange and a second job)
+      signed.foreachPartition((_: Iterator[Row]) => ())
+      val sig = signed.where(col(SigCol).isNotNull)
+        .select(col(cfg.idCol), col(SigCol).as("sig"))
 
-      // 1. vs the accepted corpus: candidate ids via the band join into the
-      // index, verified on stored signatures (narrow keys shuffle; the wide
-      // sig arrays join back only for candidates)
-      // empty frame's schema derives from the batch itself (Config allows
-      // any idCol type; a typed literal here would break the unionByName
-      // with dropInBatch on the first batch of a non-bigint id column)
-      def verifyCandidates(cand: DataFrame, sIdx: DataFrame): DataFrame =
-        cand.distinct()
-          .join(sig.select(col(cfg.idCol).as("new_id"),
-            col("sig").as("s1")), "new_id")
-          .join(sIdx.select(col("doc_id").as("index_id"),
-            col("sig").as("s2")), "index_id")
-          .filter(estJaccard(cfg.numHashes) >= cfg.minEst)
-          .select("new_id").distinct()
-      val dropVsIndex =
-        if (cfg.bucketed && DedupIndex.exists(spark, cfg.indexDir)) {
-          // bucketed tables: the candidate join consumes the index's hash
-          // layout — only the (small) batch side of the join shuffles
-          val spec = DedupIndex.loadSpec(spark, cfg.indexDir)
-          require(spec.numHashes == cfg.numHashes && spec.bands == cfg.bands,
-            s"dedup index at ${cfg.indexDir} was built with numHashes=" +
-              s"${spec.numHashes} bands=${spec.bands}; Config has numHashes=" +
-              s"${cfg.numHashes} bands=${cfg.bands} — probing with a " +
-              "mismatched hash config silently accepts near-duplicates")
-          val bIdx = DedupIndex.bandsRelation(spark, cfg.indexDir)
-          verifyCandidates(
-            bandsNew
-              .select(DedupIndex.bk(col("band"), col("band_key")).as("bk"),
-                col("new_id"))
-              .join(bIdx, "bk")
-              .select(col("new_id"), col("doc_id").as("index_id")),
-            DedupIndex.sigsRelation(spark, cfg.indexDir))
-        } else if (!cfg.bucketed && indexExists(spark, cfg)) {
-          val bIdx = spark.read.parquet(s"${cfg.indexDir}/bands")
-          verifyCandidates(
-            bandsNew.join(bIdx, Seq("band", "band_key"))
-              .select(col("new_id"), col("doc_id").as("index_id")),
-            spark.read.parquet(s"${cfg.indexDir}/sigs"))
-        } else b.select(col(cfg.idCol).as("new_id")).limit(0)
-
-      // 2. within the batch: LSH pairs → components → keep the min-id
-      // canonical of each near-dup cluster. Pairs derive from the SAME
-      // cached signatures persisted into the index below — the MD5/shingle
-      // map-side work (the batch's dominant cost) runs once, not twice.
+      // 1. vs the accepted corpus and 2. within the batch — independent,
+      // so they overlap (ParallelOps). Both return their drop ids to the
+      // driver: each set is at most the batch's ids (the probe's once per
+      // verified band collision, deduplicated on the driver instead of by
+      // a shuffle).
       //
-      // The two drop subtrees are INDEPENDENT (vs-index probe; in-batch
-      // components) but the components run EAGERLY (checkpoint + driver
-      // union-find) while the probe used to wait its turn inside the
-      // survivors write — overlap them (guide §2.6): the probe's drop set
-      // is checkpointed on a sibling thread while the CC rounds run, so the
-      // batch's two expensive subtrees share the executors instead of
-      // queueing. `dropVsIndexC` is ids-only, so the checkpoint is tiny;
-      // `survivors` is still consumed twice (outDir write + index-extend
-      // join), which is why the union stays cached too.
-      //
-      // A checkpoint, not a cache: a cached frame whose plan reads the
-      // index is re-planned by CacheManager.recacheByPath after each of the
-      // index extend's two appends, which DedupIndex runs on two threads.
-      // Two such re-plans of one frame race on the tables' shared
-      // InMemoryFileIndex (not thread-safe: a planner reads a null
-      // partitionSpec while the other thread refreshes it — the
-      // intermittent "phase optimization failed" NPE). The checkpoint's
-      // plan reads no index path, so the appends re-plan nothing.
-      var dropVsIndexC: DataFrame = null
-      var dropInBatch: DataFrame = null
+      // The probe verifies candidates on the stored signatures. The batch
+      // band rows (small, exact size) broadcast into the index band scan;
+      // the candidates carry the batch signature and are broadcast in turn
+      // into the index signature scan, so no index relation is ever
+      // broadcast or shuffled, in either index mode.
+      var dropVsIndex: Array[Row] = Array.empty
+      var dropInBatch: Array[Row] = Array.empty
       label("index probe ∥ in-batch LSH components")
       graft.operators.ParallelOps.inParallel(
-        { dropVsIndexC = graft.Caches.checkpointed(dropVsIndex) },
+        accepted.foreach { acc =>
+          val batchBands = Dedup.minhashBandsWithSig(sig, cfg.idCol,
+              cfg.numHashes, cfg.bands)
+            .select(DedupIndex.bk(col("band"), col("band_key")).as("bk"),
+              col(cfg.idCol).as("new_id"), col("sig").as("s1"))
+          val cand = acc.bands.join(broadcast(batchBands), "bk")
+            .select("index_id", "new_id", "s1")
+          dropVsIndex = acc.sigs
+            .join(broadcast(cand), acc.sigs("index_id") === cand("index_id") &&
+              Dedup.estJaccard(cand("s1"), acc.sigs("s2"), cfg.numHashes) >=
+                cfg.minEst)
+            .select(cand("new_id")).collect()
+        },
         {
+          // within the batch: LSH pairs → components → keep the min-id
+          // canonical of each near-dup cluster
           val batchPairs = Dedup.minhashLshPairsFromSignatures(sig,
             cfg.idCol, cfg.numHashes, cfg.bands, cfg.minEst)
           dropInBatch = Dedup.connectedComponents(batchPairs, "id1", "id2")
             .filter(col("node") =!= col("lbl"))
-            .select(col("node").as("new_id"))
+            .select(col("node")).collect()
         })
-      // NO distinct on the union (round 18, guide §2.4 "a distinct on data
-      // whose consumer doesn't need it"): `dropped` feeds exactly one
-      // LEFT ANTI join — an existence test — so duplicate ids (a doc
-      // dropped both vs-index and in-batch; both sides are already
-      // internally distinct) cannot change a single output row, while the
-      // distinct cost a full Exchange + two HashAggregates per micro-batch
-      // at every scale.
-      val dropped = graft.Caches.tracked(
-        dropVsIndexC.unionByName(dropInBatch))
-      val survivors = b.join(dropped,
-        b(cfg.idCol) === dropped("new_id"), "left_anti")
-
-      label("survivors write (index probe + anti-join)")
-      survivors.write.mode("append").parquet(cfg.outDir)
+      // the drop set, decided once on the driver and consumed as a
+      // plan-time constant: an IN-set predicate ships with each task, so
+      // neither the survivors write nor the index extend joins, shuffles
+      // the batch's text, or runs a job to broadcast it (a broadcast
+      // LocalRelation still runs one collect job per consuming plan).
+      // Null ids never match, as in an anti-join.
+      val dropIds = (dropVsIndex ++ dropInBatch).map(_.get(0)).distinct
+      def kept(df: DataFrame): DataFrame = df.where(
+        col(cfg.idCol).isNull || !col(cfg.idCol).isInCollection(dropIds))
+      label("survivors write")
+      kept(signed).drop(SigCol).write.mode("append").parquet(cfg.outDir)
       // survivors extend the index (bands + signatures); short docs have
-      // no signature row and therefore never enter the index.
-      // sig's ids are a subset of the batch's ids, so the survivors'
-      // signatures are exactly sig MINUS the (cached, ids-only) drop set —
-      // one anti-join, instead of re-running the batch anti-join and
-      // equi-joining sig against it (guide §1.2: both index-extend writes
-      // consume this subtree, so the saved join is paid twice per batch).
-      // Under a pathological batch with REPEATED ids the old equi-join
-      // also multiplied sig rows (n² copies per id); the anti-join keeps
-      // the index linear in the batch.
-      val survSig = sig.join(dropped,
-        sig(cfg.idCol) === dropped("new_id"), "left_anti")
+      // no signature row and therefore never enter the index. One frame
+      // feeds both appends.
+      val survSig = kept(sig)
       label("index extend (bands+sigs)")
-      if (cfg.bucketed) {
-        if (!DedupIndex.exists(spark, cfg.indexDir))
+      val resolved = accepted.flatMap(_.resolved)
+      if (cfg.bucketed) resolved match {
+        case Some(ix) =>
+          DedupIndex.appendImpl(survSig, cfg.idCol, cfg.indexDir, ix.spec)
+        case None =>
           DedupIndex.buildFromSignatures(survSig, cfg.idCol,
             DedupIndex.Spec(cfg.numHashes, cfg.bands, cfg.buckets),
             cfg.indexDir)
-        else DedupIndex.appendFromSignatures(survSig, cfg.idCol, cfg.indexDir,
-          cfg.numHashes, cfg.bands)
       } else {
         Dedup.minhashBands(survSig, cfg.idCol, cfg.numHashes, cfg.bands)
           .select(col("band"), col("band_key"), col(cfg.idCol).as("doc_id"))
@@ -214,55 +193,79 @@ object StreamingDedup {
         survSig.select(col(cfg.idCol).as("doc_id"), col("sig"))
           .write.mode("append").parquet(s"${cfg.indexDir}/sigs")
       }
-      sig.unpersist()
-      // this batch's drop set is spent: release it now (no harness drains
-      // the registry between a stream's micro-batches)
-      dropped.unpersist()
-      graft.Caches.free(dropVsIndexC)
       label("batch marker + auto-compact")
       BatchMarker.record(spark, cfg.indexDir, batchId)
       // auto-compaction AFTER the marker: compaction is content-neutral
       // and restartable, so a crash mid-compact can never re-append the
       // batch — the orphan generation dir is overwritten on the next
       // trigger
-      if (cfg.bucketed && cfg.compactThreshold > 0 &&
-          DedupIndex.maxFilesPerBucket(spark, cfg.indexDir) >
-            cfg.compactThreshold) {
-        if (cfg.deferMaintenance)
-          DedupIndex.signalMaintenanceDue(spark, cfg.indexDir)
-        else DedupIndex.compact(spark, cfg.indexDir)
+      if (cfg.bucketed && cfg.compactThreshold > 0) {
+        val filesPerBucket = resolved match {
+          case Some(ix) =>
+            DedupIndex.maxFilesPerBucketAt(spark, cfg.indexDir, ix.generation)
+          case None => DedupIndex.maxFilesPerBucket(spark, cfg.indexDir)
+        }
+        if (filesPerBucket > cfg.compactThreshold) {
+          if (cfg.deferMaintenance)
+            DedupIndex.signalMaintenanceDue(spark, cfg.indexDir)
+          else DedupIndex.compact(spark, cfg.indexDir)
+        }
       }
     } finally {
-      b.unpersist()
+      signed.unpersist()
       spark.sparkContext.setJobDescription(null)
     }
   }
 
-  private def indexExists(spark: SparkSession, cfg: Config): Boolean = {
+  private def plainIndexExists(spark: SparkSession, cfg: Config): Boolean = {
     val p = new org.apache.hadoop.fs.Path(s"${cfg.indexDir}/bands")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
   }
 
-  /** Refuse to run when `indexDir` holds an index of the OTHER mode's
-    * layout. bucketed=true over a plain-parquet index (band files but no
-    * `meta/`) would otherwise silently ignore the whole accepted corpus —
-    * near-dups pass the gate — and then `buildFromSignatures` OVERWRITES
-    * the plain files; the reverse switch would only fail deep inside the
-    * candidate join with a schema error. */
-  private def requireLayoutMatches(spark: SparkSession, cfg: Config): Unit = {
-    val bucketedIdx = DedupIndex.exists(spark, cfg.indexDir)
-    val plainIdx = !bucketedIdx && indexExists(spark, cfg)
-    if (cfg.bucketed && plainIdx)
-      throw new IllegalStateException(
-        s"${cfg.indexDir} holds a plain-parquet dedup index but Config has " +
-          "bucketed=true — running would ignore (then destroy) the " +
-          "accepted corpus; restart with bucketed=false or point at a " +
-          "fresh indexDir")
-    if (!cfg.bucketed && bucketedIdx)
-      throw new IllegalStateException(
-        s"${cfg.indexDir} holds a BUCKETED dedup index (meta/ present) but " +
-          "Config has bucketed=false; restart with bucketed=true or point " +
-          "at a fresh indexDir")
-  }
+  /** The accepted corpus in `cfg`'s index mode, or None before the first
+    * batch. Refuses to run when `indexDir` holds an index of the OTHER
+    * mode's layout: bucketed=true over a plain-parquet index (band files
+    * but no `meta`) would otherwise silently ignore the whole accepted
+    * corpus — near-dups pass the gate — and then `buildFromSignatures`
+    * OVERWRITES the plain files; the reverse switch would only fail deep
+    * inside the candidate join with a schema error. */
+  private def acceptedCorpus(spark: SparkSession,
+                             cfg: Config): Option[Accepted] =
+    if (cfg.bucketed) {
+      val resolved = DedupIndex.resolve(spark, cfg.indexDir)
+      if (resolved.isEmpty && plainIndexExists(spark, cfg))
+        throw new IllegalStateException(
+          s"${cfg.indexDir} holds a plain-parquet dedup index but Config has " +
+            "bucketed=true — running would ignore (then destroy) the " +
+            "accepted corpus; restart with bucketed=false or point at a " +
+            "fresh indexDir")
+      resolved.map { ix =>
+        require(ix.spec.numHashes == cfg.numHashes && ix.spec.bands == cfg.bands,
+          s"dedup index at ${cfg.indexDir} was built with numHashes=" +
+            s"${ix.spec.numHashes} bands=${ix.spec.bands}; Config has " +
+            s"numHashes=${cfg.numHashes} bands=${cfg.bands} — probing with a " +
+            "mismatched hash config silently accepts near-duplicates")
+        Accepted(
+          spark.table(ix.bandsTable)
+            .select(col("bk"), col("doc_id").as("index_id")),
+          spark.table(ix.sigsTable)
+            .select(col("doc_id").as("index_id"), col("sig").as("s2")),
+          Some(ix))
+      }
+    } else {
+      if (DedupIndex.exists(spark, cfg.indexDir))
+        throw new IllegalStateException(
+          s"${cfg.indexDir} holds a BUCKETED dedup index (meta/ present) but " +
+            "Config has bucketed=false; restart with bucketed=true or point " +
+            "at a fresh indexDir")
+      if (!plainIndexExists(spark, cfg)) None
+      else Some(Accepted(
+        spark.read.parquet(s"${cfg.indexDir}/bands")
+          .select(DedupIndex.bk(col("band"), col("band_key")).as("bk"),
+            col("doc_id").as("index_id")),
+        spark.read.parquet(s"${cfg.indexDir}/sigs")
+          .select(col("doc_id").as("index_id"), col("sig").as("s2")),
+        None))
+    }
 }

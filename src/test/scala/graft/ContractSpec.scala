@@ -33,22 +33,11 @@ class ContractSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  /** a failure's whole cause chain, one class and message per cause, then
-    * the root cause's top frames: an INTERNAL_ERROR's message alone names
-    * only the phase that failed, not what failed in it */
-  private def causeChain(e: Throwable): String = {
-    val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-      .take(32).toSeq
-    chain.map(c => s"${c.getClass.getName}: ${c.getMessage}")
-      .mkString("\n  caused by: ") +
-      chain.last.getStackTrace.take(12).map(f => s"\n    at $f").mkString
-  }
-
   test("every declared query executes at sf0.001") {
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         try { fn(spark, dir).count(); None }
-        catch { case e: Throwable => Some(s"$name: ${causeChain(e)}") }
+        catch { case e: Throwable => Some(s"$name: ${Verify.causeChain(e)}") }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }

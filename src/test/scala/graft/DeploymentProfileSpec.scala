@@ -10,17 +10,16 @@ import org.scalatest.BeforeAndAfterAll
 
 /** A session built through [[DeploymentProfile.configure]] carries the
   * profile's Hadoop keys, and they resolve `file:` to the `graft.fs`
-  * classes. */
+  * classes. The session here is the out-of-process index maintainer's
+  * (`IndexMaintainer.sessionBuilder`), so the same checks pin that JVM's
+  * filesystem too. */
 class DeploymentProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val spark = {
     // getOrCreate would hand back a running context built without the
     // profile, whose Hadoop conf never sees the builder's keys
     SparkSession.getDefaultSession.foreach(_.stop())
-    DeploymentProfile.configure(SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    IndexMaintainer.sessionBuilder().master("local[2]").getOrCreate()
   }
 
   override def afterAll(): Unit = spark.stop()
@@ -36,5 +35,20 @@ class DeploymentProfileSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(afs.isInstanceOf[NioLocalFs], afs.getClass.getName)
     assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
       DeploymentProfile.CodegenCacheMaxEntries.toString)
+  }
+
+  test("the out-of-process index maintainer's session writes through the " +
+    "java.nio local filesystem") {
+    assert(spark.sparkContext.appName == "graft-index-maintainer")
+    val dir = java.nio.file.Files.createTempDirectory("graft_profile_maint")
+    val p = new org.apache.hadoop.fs.Path(dir.toUri.toString, "part-0")
+    // a new instance: the JVM-wide FileSystem cache may hold another
+    // session's `file:` filesystem
+    val fs = FileSystem.newInstance(p.toUri, spark.sparkContext.hadoopConfiguration)
+    try {
+      assert(fs.isInstanceOf[NioLocalFileSystem], fs.getClass.getName)
+      fs.create(p, true).close()
+      assert(fs.exists(p))
+    } finally fs.close()
   }
 }

@@ -313,6 +313,55 @@ class StreamingDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().toSet == Set(1L, 2L, 4L))
   }
 
+  test("one gate batch against a bucketed index runs at most 13 Spark " +
+    "jobs and keeps exactly the batch-operator survivors") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_sdedup_jobs").toString
+    val cfg = StreamingDedup.Config(s"$root/index", s"$root/out",
+      bucketed = true, buckets = 8)
+    // the accepted corpus: 100 distinct docs
+    val accepted = (1 to 100).map(i => SDoc(i, words(s"acc${i}w")))
+    StreamingDedup.ingest(cfg)(accepted.toDF(), 0L)
+    // 200 docs: 20 exact copies of accepted docs, 20 near copies (last
+    // token changed), a 10-doc in-batch cluster of one new text, 148 new
+    // docs and 2 too short to sign
+    def near(t: String): String = t.split(" ").dropRight(1).mkString(" ") + " zz"
+    val batch = (1 to 20).map(i => SDoc(1000 + i, accepted(i - 1).text)) ++
+      (21 to 40).map(i => SDoc(1000 + i, near(accepted(i - 1).text))) ++
+      (41 to 50).map(i => SDoc(1000 + i, words("clusterw"))) ++
+      (51 to 198).map(i => SDoc(1000 + i, words(s"new${i}w"))) ++
+      Seq(SDoc(1199, "a b"), SDoc(1200, "c"))
+    assert(batch.size == 200)
+    // the expected survivors from the batch operators: drop vs the
+    // accepted corpus, then keep each in-batch component's min id
+    val batchDf = batch.toDF()
+    val vsIndex = graft.operators.Dedup
+      .incrementalMinhashPairs(batchDf, accepted.toDF(), "doc_id", "text")
+      .select("new_id").as[Long].collect().toSet
+    val inBatch = graft.operators.Dedup.connectedComponents(
+        graft.operators.Dedup.minhashLshPairs(batchDf, "doc_id", "text"),
+        "id1", "id2")
+      .filter(col("node") =!= col("lbl")).select("node").as[Long]
+      .collect().toSet
+    val expected = batch.map(_.doc_id).toSet -- vsIndex -- inBatch
+    assert((1001L to 1020L).forall(vsIndex), vsIndex)
+    assert(inBatch == (1042L to 1050L).toSet, inBatch)
+
+    val sc = spark.sparkContext
+    org.apache.spark.graftspec.ListenerBus.drain(sc)
+    sc.setJobGroup("gate-jobs", "one gate batch")
+    try StreamingDedup.ingest(cfg)(batchDf, 1L)
+    finally sc.clearJobGroup()
+    org.apache.spark.graftspec.ListenerBus.drain(sc)
+    val jobs = sc.statusTracker.getJobIdsForGroup("gate-jobs").length
+    assert(jobs <= 13, s"one gate batch ran $jobs Spark jobs")
+    val out = spark.read.parquet(cfg.outDir).select("doc_id").as[Long]
+      .collect().toSet -- accepted.map(_.doc_id)
+    assert(out == expected, (out -- expected, expected -- out))
+  }
+
   test("mode/layout mismatches fail LOUDLY instead of silently accepting " +
     "dups or destroying the index") {
     import spark.implicits._
