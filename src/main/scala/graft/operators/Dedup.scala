@@ -27,18 +27,20 @@ object Dedup {
     df.groupBy(md5(col(contentCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
 
-  /** Per-doc MinHash signatures of the signable docs: (id, sig array<long>). */
+  /** Per-doc MinHash signatures: (id, sig array<long>). */
   def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 16): DataFrame =
-    withMinhashSignature(df.select(col(idCol), col(textCol)), textCol,
-      numHashes, "sig")
-      .where(col("sig").isNotNull)
-      .select(col(idCol), col("sig"))
+    df.select(col(idCol), tokens(col(textCol)).as("w"))
+      .filter(size(col("w")) >= 3)
+      .withColumn("sh", wordShingles3("w"))
+      .select(col(idCol), minhashSignature("sh", numHashes).as("sig"))
 
   /** `df` with each row's MinHash signature appended as `sigCol`: NULL for a
     * doc too short to sign (< 3 tokens, no shingles). For callers that need
     * the documents and their signatures in one relation (the streaming gate
-    * caches this once per batch). */
+    * caches this once per batch). Filtering on `sigCol` before caching
+    * would evaluate the signature twice: the optimizer pushes the filter
+    * below the projection by substituting the signature expression. */
   def withMinhashSignature(df: DataFrame, textCol: String, numHashes: Int,
                            sigCol: String): DataFrame =
     df.withColumn("__w", tokens(col(textCol)))
@@ -74,12 +76,11 @@ object Dedup {
   /** MinHash-LSH candidate pairs with estimated Jaccard ≥ `minEst`.
     *
     * Topology: signatures materialize once (persisted signature table at
-    * cluster scale); candidate generation self-joins the (id, band,
-    * band_key, sig) relation on the band key and verifies each colliding
-    * pair IN the join, so the signatures are read once per band row instead
-    * of joined back twice per candidate. Shuffle key is (band, band_key) —
-    * no all-pairs product anywhere; a pair colliding in several bands is
-    * verified once per band and deduplicated by the final distinct. */
+    * cluster scale); candidate generation self-joins the NARROW (id, band,
+    * band_key) relation and dedups on bare (id1, id2) — the wide signature
+    * arrays never enter the candidate shuffle, they are joined back only for
+    * the surviving pairs. Shuffle key is (band, band_key) — no all-pairs
+    * product anywhere. */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 16, bands: Int = 4,
                       minEst: Double = 0.5): DataFrame =
@@ -89,24 +90,23 @@ object Dedup {
 
   /** [[minhashLshPairs]] starting from an already-computed signature table
     * (id, sig) — the variant for callers that materialize signatures once
-    * and reuse them across stages (e.g. the streaming ingestion gate, which
-    * also persists the same signatures into its index: recomputing the
-    * MD5/shingle map-side work per stage doubles the batch's dominant
-    * cost). */
+    * and reuse them across stages (recomputing the MD5/shingle map-side
+    * work per stage doubles the dominant cost). */
   def minhashLshPairsFromSignatures(sigDf: DataFrame, idCol: String,
                                     numHashes: Int, bands: Int,
                                     minEst: Double): DataFrame = {
-    val b = minhashBandsWithSig(sigDf, idCol, numHashes, bands)
-    val l = b.select(col(idCol).as("id1"), col("band"), col("band_key"),
-      col("sig").as("s1"))
-    val r = b.select(col(idCol).as("id2"), col("band").as("band2"),
-      col("band_key").as("band_key2"), col("sig").as("s2"))
-    val est = estJaccard(col("s1"), col("s2"), numHashes)
-    l.join(r, col("band") === col("band2") &&
-        col("band_key") === col("band_key2") &&
-        col("id1") < col("id2") && est >= minEst)
-      .select(col("id1"), col("id2"), est.as("est_jaccard"))
-      .distinct()
+    val b = minhashBands(sigDf, idCol, numHashes, bands)
+    val cand = b.select(col(idCol).as("id1"), col("band"), col("band_key"))
+      .join(b.select(col(idCol).as("id2"), col("band"), col("band_key")),
+        Seq("band", "band_key"))
+      .filter(col("id1") < col("id2"))
+      .select("id1", "id2").distinct()
+    cand
+      .join(sigDf.select(col(idCol).as("id1"), col("sig").as("s1")), "id1")
+      .join(sigDf.select(col(idCol).as("id2"), col("sig").as("s2")), "id2")
+      .withColumn("est_jaccard", estJaccard(col("s1"), col("s2"), numHashes))
+      .filter(col("est_jaccard") >= minEst)
+      .select("id1", "id2", "est_jaccard")
   }
 
   /** LSH parameter sweep: for each band count in `bandConfigs`, measure
@@ -334,10 +334,6 @@ object Dedup {
     // reliable-checkpoint files are removed by the cleaner / dir teardown)
     def release(df: DataFrame): Unit = if (!reliable) graft.Caches.free(df)
     val p0 = pairs.select(col(leftCol).as("a"), col(rightCol).as("b"))
-    // reliable mode writes the pair input to the DFS before anything reads
-    // it, fast path included; local mode checkpoints it only when the
-    // distributed path below needs it
-    val pIn = if (reliable) chk(p0) else p0
     // SMALL-GRAPH FAST PATH: iterative propagation pays per-round
     // short-stage overhead (job launch + tiny shuffle + checkpoint) that
     // dominates when the surviving pair set is small — the common case for
@@ -369,11 +365,26 @@ object Dedup {
     // an unbounded driver collect.
     val bound = math.min(math.min(smallGraphThreshold, smallGraphMaxBytes / 64L),
       Int.MaxValue - 1L)
+    val small = integral(typeA) && integral(typeB) && bound >= 0
+    // the pair input is computed ONCE whichever path runs: reliable mode
+    // writes it to the DFS before anything reads it; local mode caches its
+    // rows for the bounded collect, and a graph above the bound is
+    // checkpointed from that cache (the upstream pair join does not run
+    // again; the collect that found it too big pulled at most bound + 1
+    // narrow rows). An RDD cache: a cached Dataset's scan cost the
+    // streaming gate one more Spark job per batch.
+    val pIn = if (reliable) chk(p0) else p0
+    val cachedRows =
+      if (reliable || !small) None
+      else Some(p0.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    def uncache(): Unit = cachedRows.foreach(_.unpersist(blocking = false))
     val collected =
-      if (integral(typeA) && integral(typeB) && bound >= 0)
-        Some(pIn.limit(bound.toInt + 1).collect()).filter(_.length <= bound)
-      else None
+      if (!small) None
+      else try Some(cachedRows.fold(pIn.limit(bound.toInt + 1).collect())(
+          _.take(bound.toInt + 1))).filter(_.length <= bound)
+      catch { case e: Throwable => uncache(); throw e }
     if (collected.isDefined) {
+      uncache()
       val rows = collected.get
       // each column read with ITS OWN accessor — a mixed Int/Long pair
       // input must not ClassCastException (it widens, like the union above)
@@ -438,7 +449,11 @@ object Dedup {
     // construction below references it several times (both directions +
     // node extraction), and each reference would otherwise re-run the
     // upstream pair-generation join
-    val p = if (reliable) pIn else chk(p0)
+    val p =
+      if (reliable) pIn
+      else try chk(cachedRows.fold(p0)(
+        pairs.sparkSession.createDataFrame(_, p0.schema)))
+      finally uncache()
     // both directions + a self-loop per node: the per-round neighbor-min
     // then already includes the node's own label, so the loop body is pure
     // join+aggregate (no Union over checkpointed plans, which trips

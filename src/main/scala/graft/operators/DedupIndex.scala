@@ -425,10 +425,9 @@ object DedupIndex {
     }
   }
 
-  /** An index as one caller saw it: hash config, live generation and the
-    * registered table names. See [[resolve]]. */
-  private[graft] final case class Resolved(spec: Spec, generation: Int,
-                                           bandsTable: String,
+  /** An index as one caller saw it: hash config and the registered table
+    * names. See [[resolve]]. */
+  private[graft] final case class Resolved(spec: Spec, bandsTable: String,
                                            sigsTable: String)
 
   /** Resolve an index ONCE for a caller that probes it and then appends to
@@ -441,7 +440,7 @@ object DedupIndex {
     else {
       val (spec, gen) = readMeta(spark, indexDir)
       registerAt(spark, indexDir, spec, gen)
-      Some(Resolved(spec, gen, bandsTable(spark, indexDir),
+      Some(Resolved(spec, bandsTable(spark, indexDir),
         sigsTable(spark, indexDir)))
     }
 
@@ -781,9 +780,16 @@ object DedupIndex {
     // they close the round-14 post-check's remaining TOCTOU (a rewrite
     // that snapshotted before our rows landed but flipped after our
     // generation re-read went undetected).
+    testBeforeAppend()
     val token = IndexCommit.beginAppend(f, indexDir)
     try {
       val gen = loadMeta(spark, indexDir)._2
+      // write into THAT generation: a maintainer in another process may
+      // have flipped it since the caller registered the tables, and this
+      // JVM's catalog would still name the superseded generation's dirs —
+      // the post-check below compares generations, not write locations.
+      // A no-op when the registration is current.
+      registerAt(spark, indexDir, spec, gen)
       // no path option: the registered table's location names the CURRENT
       // generation dir (a stale literal path would disagree after compact)
       val (bands, sigs) = bandRows(sig, idCol, spec)
@@ -820,16 +826,16 @@ object DedupIndex {
     * post-check — a spec interleaves a racing rewrite deterministically */
   private[graft] var testAfterAppendWrite: () => Unit = () => ()
 
+  /** test seam: runs before an append drops its intent — a spec flips the
+    * generation after the caller registered the tables */
+  private[graft] var testBeforeAppend: () => Unit = () => ()
+
   /** max band files in any single bucket of the LIVE generation — the
     * fragmentation signal an auto-compaction policy thresholds on (one
     * directory listing, no data read). Bucketed files carry their bucket
     * id as the `_NNNNN` filename suffix. */
-  def maxFilesPerBucket(spark: SparkSession, indexDir: String): Int =
-    maxFilesPerBucketAt(spark, indexDir, loadMeta(spark, indexDir)._2)
-
-  /** [[maxFilesPerBucket]] of a generation the caller already read */
-  private[graft] def maxFilesPerBucketAt(spark: SparkSession, indexDir: String,
-                                         gen: Int): Int = {
+  def maxFilesPerBucket(spark: SparkSession, indexDir: String): Int = {
+    val (_, gen) = loadMeta(spark, indexDir)
     val dir = new org.apache.hadoop.fs.Path(dataDir(indexDir, "bands", gen))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(dir)) 0
@@ -933,7 +939,7 @@ object DedupIndex {
       gens.mkString(","), gens.length,
       bandRows, sigRows,
       bandFiles, bandBytes, sigFiles, sigBytes,
-      maxFilesPerBucketAt(spark, indexDir, gen),
+      maxFilesPerBucket(spark, indexDir),
       IndexCommit.maintenanceDue(f, indexDir)))
       .toDF("num_hashes", "bands", "buckets", "live_generation",
         "generations_on_disk", "n_generations", "band_rows", "sig_rows",

@@ -106,7 +106,8 @@ object StreamingDedup {
     *   4. index extend (2): the band and signature appends, in parallel.
     * The index is resolved once before the probe is planned (one meta
     * read, one catalog registration); the append re-reads the generation
-    * around its write, and the marker and compaction check read no data. */
+    * around its write and writes into the generation it read, and the
+    * marker and compaction check read no data. */
   def ingest(cfg: Config)(batch: DataFrame, batchId: Long): Unit = {
     val spark = batch.sparkSession
     if (BatchMarker.alreadyApplied(spark, cfg.indexDir, batchId)) return
@@ -156,9 +157,8 @@ object StreamingDedup {
         {
           // within the batch: LSH pairs → components → keep the min-id
           // canonical of each near-dup cluster
-          val batchPairs = Dedup.minhashLshPairsFromSignatures(sig,
-            cfg.idCol, cfg.numHashes, cfg.bands, cfg.minEst)
-          dropInBatch = Dedup.connectedComponents(batchPairs, "id1", "id2")
+          dropInBatch = Dedup.connectedComponents(inBatchPairs(sig, cfg),
+              "id1", "id2")
             .filter(col("node") =!= col("lbl"))
             .select(col("node")).collect()
         })
@@ -178,8 +178,7 @@ object StreamingDedup {
       // feeds both appends.
       val survSig = kept(sig)
       label("index extend (bands+sigs)")
-      val resolved = accepted.flatMap(_.resolved)
-      if (cfg.bucketed) resolved match {
+      if (cfg.bucketed) accepted.flatMap(_.resolved) match {
         case Some(ix) =>
           DedupIndex.appendImpl(survSig, cfg.idCol, cfg.indexDir, ix.spec)
         case None =>
@@ -200,12 +199,8 @@ object StreamingDedup {
       // batch — the orphan generation dir is overwritten on the next
       // trigger
       if (cfg.bucketed && cfg.compactThreshold > 0) {
-        val filesPerBucket = resolved match {
-          case Some(ix) =>
-            DedupIndex.maxFilesPerBucketAt(spark, cfg.indexDir, ix.generation)
-          case None => DedupIndex.maxFilesPerBucket(spark, cfg.indexDir)
-        }
-        if (filesPerBucket > cfg.compactThreshold) {
+        if (DedupIndex.maxFilesPerBucket(spark, cfg.indexDir) >
+            cfg.compactThreshold) {
           if (cfg.deferMaintenance)
             DedupIndex.signalMaintenanceDue(spark, cfg.indexDir)
           else DedupIndex.compact(spark, cfg.indexDir)
@@ -215,6 +210,25 @@ object StreamingDedup {
       signed.unpersist()
       spark.sparkContext.setJobDescription(null)
     }
+  }
+
+  /** The batch's verified LSH pairs (id1 < id2): the pairs of
+    * [[Dedup.minhashLshPairsFromSignatures]], but each band row carries its
+    * signature through the band self-join and the pair is verified in the
+    * join, so the batch's signature table is read once instead of joined
+    * back twice. Right for a micro-batch; the batch operator keeps the wide
+    * signatures out of its candidate shuffle, which matters at corpus
+    * scale. */
+  private def inBatchPairs(sig: DataFrame, cfg: Config): DataFrame = {
+    val b = Dedup.minhashBandsWithSig(sig, cfg.idCol, cfg.numHashes, cfg.bands)
+    val l = b.select(col(cfg.idCol).as("id1"), col("band"), col("band_key"),
+      col("sig").as("s1"))
+    val r = b.select(col(cfg.idCol).as("id2"), col("band").as("band2"),
+      col("band_key").as("band_key2"), col("sig").as("s2"))
+    l.join(r, col("band") === col("band2") &&
+        col("band_key") === col("band_key2") && col("id1") < col("id2") &&
+        Dedup.estJaccard(col("s1"), col("s2"), cfg.numHashes) >= cfg.minEst)
+      .select("id1", "id2").distinct()
   }
 
   private def plainIndexExists(spark: SparkSession, cfg: Config): Boolean = {

@@ -140,4 +140,19 @@ class DedupComponentsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val m = df.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
     assert(m == Map(1 -> 1, 2 -> 1, 3 -> 1))
   }
+
+  test("a graph above the small-graph bound computes its pair input once") {
+    // the bounded collect that finds the graph too big and the distributed
+    // path after it must share one evaluation of the upstream pair plan
+    val evals = spark.sparkContext.longAccumulator("pair input rows")
+    val tick = udf { (a: Long) => evals.add(1); a }
+    val pairs = spark.range(1L, 40L)
+      .select(tick(col("id")).as("id1"), (col("id") + 1).as("id2"))
+      .distinct()
+    val c = graft.operators.Dedup.connectedComponents(pairs, "id1", "id2",
+        smallGraphThreshold = 10L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(c == (1L to 40L).map(_ -> 1L).toMap)
+    assert(evals.value == 39L, s"pair input rows evaluated ${evals.value} times")
+  }
 }

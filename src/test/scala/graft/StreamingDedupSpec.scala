@@ -362,6 +362,46 @@ class StreamingDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out == expected, (out -- expected, expected -- out))
   }
 
+  test("a generation flipped by another process after the gate resolved " +
+    "the index: the survivors land in the live generation") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    import graft.operators.DedupIndex
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_sdedup_flip").toString
+    val cfg = StreamingDedup.Config(s"$root/index", s"$root/out",
+      bucketed = true, buckets = 4)
+    StreamingDedup.ingest(cfg)(Seq(SDoc(1, words("alpha")),
+      SDoc(2, words("beta"))).toDF(), 0L)
+    // an out-of-process compaction between the gate's probe and its
+    // append: the meta moves to generation 1, while this JVM's catalog
+    // still names generation 0's dirs (the compaction runs here, then the
+    // catalog entries it re-registered are put back as they were)
+    val catalog = spark.sessionState.catalog
+    val ix = DedupIndex.resolve(spark, cfg.indexDir).get
+    val before = Seq(ix.bandsTable, ix.sigsTable)
+      .map(t => catalog.getTableMetadata(TableIdentifier(t)))
+    DedupIndex.testBeforeAppend = () => {
+      DedupIndex.testBeforeAppend = () => ()
+      DedupIndex.compact(spark, cfg.indexDir)
+      before.foreach { t =>
+        spark.sql(s"DROP TABLE ${t.identifier.table}")
+        catalog.createTable(t, ignoreIfExists = false)
+      }
+    }
+    try StreamingDedup.ingest(cfg)(Seq(SDoc(3, words("alpha")),
+      SDoc(4, words("gamma"))).toDF(), 1L)
+    finally DedupIndex.testBeforeAppend = () => ()
+    assert(DedupIndex.liveGeneration(spark, cfg.indexDir) == 1)
+    val live = DedupIndex.resolve(spark, cfg.indexDir).get
+    assert(spark.table(live.sigsTable).select("doc_id").as[Long].collect()
+      .toSet == Set(1L, 2L, 4L))
+    // doc 4 is accepted, so its exact copy drops against the index
+    StreamingDedup.ingest(cfg)(Seq(SDoc(5, words("gamma"))).toDF(), 2L)
+    assert(spark.read.parquet(cfg.outDir).select("doc_id").as[Long]
+      .collect().toSet == Set(1L, 2L, 4L))
+  }
+
   test("mode/layout mismatches fail LOUDLY instead of silently accepting " +
     "dups or destroying the index") {
     import spark.implicits._
