@@ -476,9 +476,9 @@ object ScaleProbe {
       println(f"${"rounds"}%7s ${"merges"}%7s ${"total_s"}%8s ${"s_per_merge"}%12s")
       Seq(2, 4, 8).foreach { r =>
         val (t, m) = time {
-          val (merges, _) = graft.queries.RetrievalQueries
-            .deepBpeTrainRounds(spark, sfDir, rounds = r)
-          merges.length.toLong
+          operators.Bpe.train(
+            operators.Bpe.vocabulary(Tables.load(spark, sfDir, "documents")),
+            rounds = r, batch = 16, window = 64).merges.length.toLong
         }
         println(f"$r%7d $m%7d $t%8.2f ${t / math.max(m, 1)}%12.4f")
         Caches.drain()

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Similarity
+import graft.operators.Bpe
 
 /** Retrieval and statistical-LM scoring over the document corpus: BM25
   * keyword search, per-document TF-IDF keywords, unigram-LM perplexity
@@ -101,13 +102,6 @@ object RetrievalQueries {
     * (4× when splits nest — measured text_kneser_ney 1.7 → 9.6 s at the
     * 10× bench before its input was tracked-cached). Inner splits scan
     * `big` twice too; pre-aggregate or cache unless it is a bare scan. */
-  /** probe seam: [[graft.KneserProbe]] rebuilds the declared kneser-ney
-    * query's exact join topology for its 10× A/B — measurement only */
-  private[graft] def zipfSplitJoinForProbe(big: DataFrame, vocab: DataFrame,
-                                           keys: Seq[String], countCol: String,
-                                           joinType: String): DataFrame =
-    zipfSplitJoin(big, vocab, keys, countCol, joinType)
-
   private def zipfSplitJoin(big: DataFrame, vocab: DataFrame,
                             keys: Seq[String], countCol: String,
                             joinType: String = "inner",
@@ -332,10 +326,8 @@ object RetrievalQueries {
     // occurrence: at 100 TB the explode costs O(vocab × word length), not
     // O(corpus tokens). Top-50 via TakeOrderedAndProject.
     "pipe_bpe_pairs" -> ((s, dir) => {
-      val vocab = t(s, dir, "documents")
-        .select(explode(split(col("text"), " ")).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("c"))
-      vocab.filter(length(col("w")) >= 2)
+      Bpe.vocabulary(t(s, dir, "documents"))
+        .filter(length(col("w")) >= 2)
         .select(col("w"), col("c"),
           explode(expr("sequence(1, length(w) - 1)")).as("i"))
         .select(expr("substr(w, i, 2)").as("pair"), col("c"))
@@ -343,38 +335,30 @@ object RetrievalQueries {
         .orderBy(col("n").desc, col("pair")).limit(50)
     }),
 
-    // BPE tokenizer TRAINING: 3 greedy merge rounds over the weighted
-    // vocabulary (pipe_bpe_pairs is round 1's counting stage; this runs
-    // the full loop). Each round: count adjacent SYMBOL pairs weighted by
-    // corpus word frequency, pick the top pair (one bounded driver collect
-    // — the kmeans pattern), merge it greedily left-to-right in every
-    // word. The merge is a fold to a boundary-delimited string: the
-    // accumulator ends '|a|' exactly when the previous symbol is a, so a
-    // symbol that merely ENDS in a can never false-match, and a just-
-    // merged symbol can't immediately re-merge (greedy non-overlap) — the
-    // oracle replays the identical fold via list_reduce. All outputs are
-    // integers (pair supports, weighted symbol counts): nothing to round.
-    // Scale: every stage is vocabulary-bounded (distinct words with their
-    // frequency as weight), never O(corpus tokens); the fold is
-    // interpreted but runs once per distinct word per round.
+    // BPE tokenizer TRAINING: 3 classic greedy merge rounds over the
+    // weighted vocabulary (pipe_bpe_pairs is round 1's counting stage; this
+    // runs the full loop) — Bpe.train at (batch 1, window 1): each round
+    // picks the top pair (one bounded driver collect — the kmeans pattern)
+    // and merges it greedily left-to-right in every word. The oracle
+    // replays the one-pair fold via list_reduce (the accumulator ends
+    // '|a|' exactly when the previous symbol is a — the one-rule case of
+    // the trainer's batch fold). All outputs are integers (pair supports,
+    // weighted symbol counts): nothing to round.
     "pipe_bpe_train" -> ((s, dir) => {
-      val (rounds, _) = bpeTrainRounds(s, dir, 3)
-      s.createDataFrame(rounds)
-        .toDF("it", "merge_a", "merge_b", "support", "corpus_symbols")
-        .orderBy("it")
+      mergeLog(s, bpeClassic(s, dir).merges).drop("ord").orderBy("it")
     }),
 
     // BPE tokenizer APPLICATION: per-language fertility (symbols per
     // token) under the 3-merge tokenizer pipe_bpe_train learns — the
-    // tokenizer-efficiency statistic a pretrain mix is balanced on. The
-    // trained per-word symbol table is O(vocabulary): it joins via the
-    // Zipf skew-split on the word's corpus count (high-mass words —
+    // tokenizer-efficiency statistic a pretrain mix is balanced on. Only
+    // the trained symbol table is read, so the merge log's last total is
+    // never computed. The per-word symbol table is O(vocabulary): it joins
+    // via the Zipf skew-split on the word's corpus count (high-mass words —
     // almost every token in the corpus-scale exploded side — stay a
     // broadcast hash join; the rare tail shuffles), never a forced
     // whole-vocabulary broadcast.
     "pipe_bpe_apply" -> ((s, dir) => {
-      val (_, syms) = bpeTrainRounds(s, dir, 3, withRoundStats = false)
-      val wsize = syms.select(col("w"), col("c"),
+      val wsize = bpeClassic(s, dir).symbols.select(col("w"), col("c"),
         size(col("syms")).cast("long").as("nsym"))
       // pre-aggregate the corpus side to (lang, w, cnt) BEFORE the join:
       // the skew-split then joins two vocabulary-bounded tables instead of
@@ -395,19 +379,18 @@ object RetrievalQueries {
     }),
 
     // DEEP BPE training: 16 batched rounds × up to 16 symbol-disjoint
-    // merges each (≥64 merges total; early rounds yield fewer because top
-    // character pairs share symbols) with NO per-merge driver round-trip —
-    // the scale shape of pipe_bpe_train (see deepBpeTrainRounds's header
-    // for the batching rule and its exactness argument). One row per
-    // merge: round, in-round order, pair, exact pre-round support, and the
-    // post-round weighted corpus symbol count (pins that every fold
-    // applied). The oracle replays the identical batched algorithm —
+    // merges each from a top-64 window (≥64 merges total; early rounds
+    // yield fewer because top character pairs share symbols) with NO
+    // per-merge driver round-trip — the scale shape of pipe_bpe_train (see
+    // Bpe's header for the batching rule and its exactness argument). One
+    // row per merge: round, in-round order, pair, exact pre-round support,
+    // and the post-round weighted corpus symbol count (pins that every
+    // fold applied). The oracle replays the identical batched algorithm —
     // selection included — via ranked windows + NOT EXISTS.
     "pipe_bpe_train_deep" -> ((s, dir) => {
-      val (merges, _) = deepBpeTrainRounds(s, dir)
-      s.createDataFrame(merges)
-        .toDF("it", "ord", "merge_a", "merge_b", "support", "corpus_symbols")
-        .orderBy("it", "ord")
+      val trained = Bpe.train(Bpe.vocabulary(t(s, dir, "documents")),
+        deepBpeRounds, deepBpeBatch, deepBpeWindow)
+      mergeLog(s, trained.merges).orderBy("it", "ord")
     }),
 
     // hard-negative mining for retrieval training: for each query vector,
@@ -662,15 +645,16 @@ object RetrievalQueries {
       // both sides are 1-row aggregates; the broadcast() hint is bounded
       // by construction (and keeps the 1×1 join a BNLJ, never a cartesian).
       // v_sz derives from the BIGRAM TYPE table, not a second corpus scan
-      // (round-18, guide §1.2 "remove passes"; A/B'd at the 10× probe —
-      // KneserProbe: hash-identical, and the corpus token-explode +
-      // corpus-wide distinct shuffle are gone): every token of a ≥2-token
-      // doc appears in some bigram's w1 or w2 OF THAT DOC, so distinct
-      // tokens = distinct(w1 ∪ w2 over bigram TYPES — already aggregated,
-      // O(types) rows) ∪ the lone tokens of single-token docs — the
-      // marker rows above (one per distinct single word; countDistinct is
-      // indifferent to the lost duplicates; split("") is [""], so a
-      // 0-token doc cannot exist and "" stays counted exactly as before).
+      // (round-18, guide §1.2 "remove passes"; A/B'd at 10×, hash-identical
+      // — OPTIMIZATION_r18.md §6, plans/r18/text_kneser_ney_*.txt — and
+      // the corpus token-explode + corpus-wide distinct shuffle are gone):
+      // every token of a ≥2-token doc appears in some bigram's w1 or w2 OF
+      // THAT DOC, so distinct tokens = distinct(w1 ∪ w2 over bigram
+      // TYPES — already aggregated, O(types) rows) ∪ the lone tokens of
+      // single-token docs — the marker rows above (one per distinct single
+      // word; countDistinct is indifferent to the lost duplicates;
+      // split("") is [""], so a 0-token doc cannot exist and "" stays
+      // counted exactly as before).
       val vocab = big.select(col("w1").as("w"))
         .unionByName(big.select(col("w2").as("w")))
         .unionByName(comb
@@ -994,313 +978,23 @@ object RetrievalQueries {
         SELECT p.cid, coalesce(n.cv, p.cv) AS cv
         FROM cent${i - 1} p LEFT JOIN newc$i n USING (cid))"""
 
-  /** escape a symbol for safe interpolation into a Spark SQL string
-    * literal (backslash first, then quote). */
-  private def sqlLit(sym: String): String =
-    sym.replace("\\", "\\\\").replace("'", "\\'")
-
-  /** ONE scan of a (w, c, syms) table yielding BOTH the top-`window`
-    * adjacent-symbol-pair candidates (by support desc, "a|b" asc — the
-    * BPE candidate ordering) AND the exact weighted symbol total
-    * Σ c·size(syms) of the SAME table. A per-word sentinel row at i=0
-    * carries c·size(syms); the (null, null) group aggregates those to the
-    * total, and the isnull-first sort key pins it ahead of the top-W
-    * pairs in one TakeOrdered — so a training round runs ONE action where
-    * it previously ran a candidate collect plus a separate count
-    * aggregate (two vocabulary passes, two plan/AQE/submit driver
-    * cycles). Pair groups are untouched by the sentinel (its key is null)
-    * and the total is the same integer the dropped aggregate computed.
-    * sequence(0, greatest(size-1, 0)): a 1-symbol word emits only its
-    * sentinel (the old filter(size≥2) semantics) and a 0-symbol word
-    * ('' from consecutive spaces) emits one sentinel of weight 0 —
-    * sequence(0, size-1) alone would DESCEND for those and feed
-    * element_at a negative index. Shared by [[bpeTrainRounds]] (window=1)
-    * and [[deepBpeTrainRounds]] (window=[[deepBpeWindow]]). */
-  private def bpePairWindowAndTotal(df: DataFrame, window: Int)
-      : (Seq[(String, String, Long)], Long) = {
-    val rows = df
-      .select(col("c"), col("syms"),
-        explode(expr("sequence(0, greatest(size(syms) - 1, 0))")).as("i"))
-      .select(
-        when(col("i") === 0, lit(null))
-          .otherwise(element_at(col("syms"), col("i"))).as("a"),
-        when(col("i") === 0, lit(null))
-          .otherwise(element_at(col("syms"), col("i") + 1)).as("b"),
-        when(col("i") === 0, col("c") * size(col("syms")))
-          .otherwise(col("c")).as("m"))
-      .groupBy("a", "b").agg(sum("m").as("n"))
-      .orderBy(col("a").isNull.desc, col("n").desc,
-        concat(col("a"), lit("|"), col("b")).asc)
-      .limit(window + 1)
-      .collect()
-    val (sentinel, pairs) = rows.partition(_.isNullAt(0))
-    (pairs.toSeq.map(r => (r.getString(0), r.getString(1), r.getLong(2))),
-      sentinel.head.getLong(2))
-  }
-
-  /** `iters` greedy BPE merge rounds over the weighted vocabulary (see
-    * pipe_bpe_train's comment for the fold's correctness argument).
-    * Returns (per-round stats, final (w, c, syms) symbol table).
-    *
-    * Precondition: corpus words must not contain `|` — it is the fold's
-    * segment delimiter on BOTH the Spark and oracle side, so a `|` inside a
-    * token would be silently conflated with a boundary. A merge whose
-    * symbols contain `|` throws at the operator boundary; quote and
-    * backslash symbols are escaped and safe. */
-  /** `withRoundStats = false` skips the per-round corpus-symbol-count
-    * aggregate (one Spark job per round) for callers that consume only the
-    * trained symbol table — pipe_bpe_apply discards the merge log, so its
-    * 3 stat aggregates were pure overhead; the merge SELECTION (top-pair
-    * job per round) is identical either way, so the trained tokenizer —
-    * and every downstream result — is unchanged. */
-  private def bpeTrainRounds(s: SparkSession, dir: String, iters: Int,
-                             withRoundStats: Boolean = true)
-      : (Seq[(Int, String, String, Long, Long)], DataFrame) = {
-    val vocab = t(s, dir, "documents")
-      .select(explode(split(col("text"), " ")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-    // Validate the precondition where it actually holds: BEFORE the first
-    // fold round. Checking only the winning merge pair (below) is too late —
-    // a corpus token containing '|' is conflated with segment boundaries
-    // inside pair counting itself, silently skewing frequencies long before
-    // any '|' pair can win a round.
-    val bad = vocab.filter(col("w").contains("|")).select("w").head(1)
-    require(bad.isEmpty,
-      s"bpeTrainRounds: corpus token '${bad.headOption.map(_.getString(0))
-        .getOrElse("")}' contains the '|' fold delimiter; pre-tokenize so " +
-        "words exclude '|'")
-    var syms = graft.Caches.tracked(vocab.withColumn("syms",
-      expr("filter(split(w, ''), x -> x <> '')")))
-    val rounds = collection.mutable.Buffer.empty[(Int, String, String, Long, Long)]
-    // with round stats, each round's post-fold symbol total rides the
-    // NEXT round's candidate scan ([[bpePairWindowAndTotal]] — one action
-    // per round instead of a top-1 collect plus a count aggregate), with
-    // one final aggregate for the last round's total; without stats the
-    // round is just the top-1 collect (no sentinel needed, totals are
-    // never computed — pipe_bpe_apply consumes only the symbol table)
-    var pendingStats: Option[(Int, String, String, Long)] = None
-    for (it <- 1 to iters) {
-      val (a, b, n) =
-        if (withRoundStats) {
-          val (pairsTop, totalPrev) = bpePairWindowAndTotal(syms, 1)
-          pendingStats.foreach { case (pit, pa, pb, pn) =>
-            rounds += ((pit, pa, pb, pn, totalPrev))
-          }
-          pendingStats = None
-          pairsTop.head
-        } else {
-          val top = syms.filter(size(col("syms")) >= 2)
-            .select(col("c"), col("syms"),
-              explode(expr("sequence(1, size(syms) - 1)")).as("i"))
-            .select(element_at(col("syms"), col("i")).as("a"),
-              element_at(col("syms"), col("i") + 1).as("b"), col("c"))
-            .groupBy("a", "b").agg(sum("c").as("n"))
-            // tie-break on the concatenated pair text — identical ordering
-            // to the oracle's ORDER BY n DESC, pair (tuple order would
-            // diverge whenever one `a` is a prefix of another)
-            .orderBy(col("n").desc,
-              concat(col("a"), lit("|"), col("b")).asc)
-            .limit(1).collect()(0)
-          (top.getString(0), top.getString(1), top.getLong(2))
-        }
-      // defense-in-depth only — the vocabulary precheck above is the gate
-      require(!a.contains("|") && !b.contains("|"),
-        s"bpeTrainRounds: merged symbol contains the '|' fold delimiter " +
-          s"(a='$a', b='$b'); pre-tokenize so words exclude '|'")
-      val (ea, eb) = (sqlLit(a), sqlLit(b))
-      syms = graft.Caches.tracked(syms.withColumn("syms", expr(
-        s"""filter(split(aggregate(syms, '|', (acc, x) ->
-           CASE WHEN x = '$eb' AND endswith(acc, '|$ea|')
-                THEN substr(acc, 1, length(acc) - ${a.length + 1}) || '$ea$eb|'
-                ELSE acc || x || '|' END), '\\\\|'), x -> x <> '')""")))
-      if (withRoundStats) pendingStats = Some((it, a, b, n))
-      else rounds += ((it, a, b, n, 0L))
-    }
-    // the last round's total: one final aggregate over the final table
-    pendingStats.foreach { case (pit, pa, pb, pn) =>
-      val nSyms = syms.agg(sum(col("c") * size(col("syms")))).collect()(0)
-        .getLong(0)
-      rounds += ((pit, pa, pb, pn, nSyms))
-    }
-    (rounds.toSeq, syms)
-  }
-
-  /** Deep BPE training constants: [[deepBpeRounds]] rounds, each applying a
-    * BATCH of up to [[deepBpeBatch]] symbol-disjoint merges selected from
-    * the top-[[deepBpeWindow]] pair candidates — ≥64 total merges without
+  /** Deep BPE training shape, shared by pipe_bpe_train_deep and its
+    * oracle: [[deepBpeRounds]] rounds, each applying a BATCH of up to
+    * [[deepBpeBatch]] symbol-disjoint merges selected from the
+    * top-[[deepBpeWindow]] pair candidates — ≥64 total merges without
     * per-merge driver round-trips. */
   private val deepBpeRounds = 16
   private val deepBpeBatch = 16
   private val deepBpeWindow = 64
 
-  /** The batch-merge fold over a `syms` array column, as SQL expr text:
-    * greedy left-to-right single pass, previous symbol = the accumulator's
-    * last closed '|'-delimited segment, a rule fires when "prev|x" is in
-    * the set (rules have pairwise-disjoint right sides by selection, so at
-    * most one can fire per step); the merged symbol becomes the new prev
-    * and stays eligible for further rules. Shared by the training loop and
-    * the equivalence property spec (DeepBpeSpec), which pins this fold to
-    * an independent plain-Scala greedy model and proves batch ≡ sequential
-    * for selected rule sets. */
-  private def bpeBatchFoldBody(setExpr: String): String =
-    s"""filter(split(aggregate(syms, '|', (acc, x) ->
-       CASE WHEN array_contains($setExpr,
-              concat(element_at(split(acc, '\\\\|'), -2), '|', x))
-            THEN concat(substr(acc, 1, length(acc)
-                   - length(element_at(split(acc, '\\\\|'), -2)) - 1),
-                 element_at(split(acc, '\\\\|'), -2), x, '|')
-            ELSE concat(acc, x, '|') END), '\\\\|'), x -> x <> '')"""
+  /** the 3-merge classic tokenizer pipe_bpe_train and pipe_bpe_apply share */
+  private def bpeClassic(s: SparkSession, dir: String): Bpe.Trained =
+    Bpe.train(Bpe.vocabulary(t(s, dir, "documents")), rounds = 3, batch = 1,
+      window = 1)
 
-  private[graft] def bpeBatchFoldExpr(rules: Seq[(String, String)]): String =
-    bpeBatchFoldBody("array(" + rules
-      .map { case (a, b) => s"'${sqlLit(a + "|" + b)}'" }.mkString(",") + ")")
-  // NOTE (tried & reverted): feeding the rule set through a broadcast
-  // 1-row relation (the embed_kmeans constant-plan pattern) to dodge the
-  // per-round codegen compile ADDED a BroadcastExchange job per round and
-  // raised the loop's driver gap — JobProbe measured 68 → 84 jobs and the
-  // warm gap roughly doubled. The literal form stays; the real per-round
-  // saving is the fused single-action round in deepBpeTrainRounds below.
-
-  /** The order-free non-overlap batch selection over a ranked candidate
-    * window — shared by the training loop and DeepBpeSpec. A candidate
-    * survives iff it conflicts with NO higher-ranked candidate (shared
-    * symbol, or equal to a higher candidate's concatenation). */
-  private[graft] def bpeSelectBatch(cands: Seq[(String, String, Long)],
-                                    batch: Int): Seq[(String, String, Long)] =
-    cands.zipWithIndex.filter { case ((a, b, _), rnk) =>
-      !cands.take(rnk).exists { case (ha, hb, _) =>
-        ha == a || ha == b || hb == a || hb == b ||
-          a == ha + hb || b == ha + hb
-      }
-    }.map(_._1).take(batch)
-
-  /** Batched BPE training — the scale shape of [[bpeTrainRounds]]. The
-    * classic algorithm launches one counting job + one driver collect PER
-    * MERGE (~30k for a real tokenizer: a driver-side sequential bottleneck,
-    * flagged by the round-11 review). This variant amortizes: per ROUND it
-    * counts pairs once, collects the top-[[deepBpeWindow]] candidates
-    * (bounded), selects up to [[deepBpeBatch]] of them that can be applied
-    * simultaneously, and merges them all in ONE distributed fold pass — the
-    * public fast-BPE batching technique (non-interacting merges commute, so
-    * a batch round is exactly the sequential result of its members).
-    *
-    * Selection rule (order-free, so the SQL oracle can replay it without
-    * recursion): rank candidates by (support desc, "a|b" asc); a candidate
-    * survives iff it conflicts with NO higher-ranked candidate in the
-    * window — selected or not — where "conflicts" means sharing a symbol
-    * (a merge of (a,b) changes the support and applicability of any pair
-    * touching a or b) or equalling a higher candidate's concatenation (the
-    * created symbol must not be another rule's operand within the round).
-    * The survivors' supports are therefore EXACT pre-round counts and the
-    * batch is order-independent; the top-1 pair is always selected, so a
-    * round is never weaker than one classic greedy step.
-    *
-    * Batched training is a documented approximation of strictly-sequential
-    * BPE (the 2nd-best pair may shift after the best merges); the oracle
-    * replays the identical batched rounds, so the gate checks THIS
-    * algorithm, not sequential equivalence.
-    *
-    * The per-round merge fold generalizes the single-pair fold: the rule
-    * set rides as an array literal (≤ [[deepBpeBatch]] entries), the
-    * previous symbol is the accumulator's last closed segment
-    * (`element_at(split(acc, '|'), -2)`), and a rule fires when
-    * "prev|x" is in the set. Rules have pairwise-disjoint right sides, so
-    * at most one rule can fire per step — same greedy non-overlap
-    * semantics as the one-pair fold.
-    *
-    * Scale: per round = 1 pair-count job over the DISTINCT-word vocabulary
-    * + 1 bounded collect (window rows) + 1 fold pass + 1 symbol-count agg;
-    * per MERGE everything is ~1/batch of that. Driver work is O(window²)
-    * string compares per round. */
-  private[graft] def deepBpeTrainRounds(s: SparkSession, dir: String,
-                                        rounds: Int = deepBpeRounds)
-      : (Seq[(Int, Int, String, String, Long, Long)], DataFrame) = {
-    val vocab = t(s, dir, "documents")
-      .select(explode(split(col("text"), " ")).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("c"))
-    val bad = vocab.filter(col("w").contains("|")).select("w").head(1)
-    require(bad.isEmpty,
-      s"deepBpeTrainRounds: corpus token '${bad.headOption.map(_.getString(0))
-        .getOrElse("")}' contains the '|' fold delimiter; pre-tokenize so " +
-        "words exclude '|'")
-    // each round CHECKPOINTS (lineage truncation), not cache(): a cached
-    // iterative plan still carries every prior round's fold expression, so
-    // analysis cost grows geometrically with rounds — measured 93 s for
-    // 16 rounds via cache() vs ~8 s checkpointed at sf0.1 (the same
-    // blowup connectedComponents documents). Checkpoints are LAZY: every
-    // round's fold is followed by a full-scan action anyway (the symbol-
-    // count aggregate; the initial split by the round-1 candidate window),
-    // which doubles as the materializer — one job per round instead of
-    // checkpoint-job + action-job (guide §1: job-count hygiene).
-    var syms = graft.Caches.checkpointedLazy(vocab.withColumn("syms",
-      expr("filter(split(w, ''), x -> x <> '')")))
-    val merges =
-      collection.mutable.Buffer.empty[(Int, Int, String, String, Long, Long)]
-    // Fused per-round collect (round 18, guide §1.2 "remove passes"): ONE
-    // scan of `syms` yields BOTH the candidate window (top-W pairs) and
-    // the weighted symbol total of the SAME table — a per-word sentinel
-    // row at i=0 carries c·size(syms); the (null, null) group aggregates
-    // those to the exact total and the isnull-first sort key pins it ahead
-    // of the top-W pairs in one TakeOrdered. Previously each round ran TWO
-    // actions (cands collect + count aggregate), i.e. two full passes over
-    // the vocabulary and two plan/AQE/submit driver cycles (~0.1 s each,
-    // measured by BpeProbe); round i's post-fold total now rides round
-    // i+1's scan, so the loop runs one action per round plus one final
-    // aggregate for the last round's total. Values are bit-identical: the
-    // pair groups are untouched by the sentinel (its key is null) and the
-    // total is the same integer sum the dropped aggregate computed.
-    // sequence(0, greatest(size-1, 0)): a 1-symbol word emits only its
-    // sentinel (the old filter(size≥2) semantics) and a 0-symbol word
-    // ('' from consecutive spaces) emits one sentinel of weight 0 —
-    // sequence(0, size-1) alone would DESCEND for those and feed
-    // element_at a negative index.
-    def windowAndTotal(df: DataFrame): (Seq[(String, String, Long)], Long) =
-      bpePairWindowAndTotal(df, deepBpeWindow)
-    // survivors of the round whose post-fold total has not arrived yet
-    var pending: Option[(Int, Seq[(String, String, Long)])] = None
-    // the checkpoint superseded by the latest fold: its blocks may be
-    // freed only after the NEW checkpoint materializes (next round's scan)
-    // — freeing earlier would strand the truncated lineage
-    var freeAfterNextMat: DataFrame = null
-    for (it <- 1 to rounds) {
-      // one action: candidate window for THIS round + the post-fold total
-      // of the PREVIOUS round (this scan also materializes the previous
-      // fold's lazy checkpoint — every partition computed exactly once)
-      val (cands, totalPrev) = windowAndTotal(syms)
-      pending.foreach { case (pit, surv) =>
-        surv.zipWithIndex.foreach { case ((a, b, n), ord) =>
-          merges += ((pit, ord + 1, a, b, n, totalPrev))
-        }
-      }
-      pending = None
-      if (freeAfterNextMat != null && (freeAfterNextMat ne syms)) {
-        graft.Caches.free(freeAfterNextMat)
-        freeAfterNextMat = null
-      }
-      // order-free non-overlap selection (mirrors the oracle's NOT EXISTS)
-      val survivors = bpeSelectBatch(cands, deepBpeBatch)
-      if (survivors.nonEmpty) {
-        survivors.foreach { case (a, b, _) =>
-          require(!a.contains("|") && !b.contains("|"),
-            s"deepBpeTrainRounds: merged symbol contains the '|' fold " +
-              s"delimiter (a='$a', b='$b')")
-        }
-        freeAfterNextMat = syms
-        syms = graft.Caches.checkpointedLazy(syms.withColumn("syms",
-          expr(bpeBatchFoldExpr(survivors.map(p => (p._1, p._2)).toSeq))))
-        pending = Some((it, survivors))
-      }
-    }
-    // the last round's total: one final aggregate over the final table
-    pending.foreach { case (pit, surv) =>
-      val nSyms = syms.agg(sum(col("c") * size(col("syms")))).collect()(0)
-        .getLong(0)
-      surv.zipWithIndex.foreach { case ((a, b, n), ord) =>
-        merges += ((pit, ord + 1, a, b, n, nSyms))
-      }
-    }
-    (merges.toSeq, syms)
-  }
+  private def mergeLog(s: SparkSession, merges: Seq[Bpe.Merge]): DataFrame =
+    s.createDataFrame(merges)
+      .toDF("it", "ord", "merge_a", "merge_b", "support", "corpus_symbols")
 
   /** the covariance-cell CTEs shared by the embed_covariance and
     * embed_pca_power oracles (mirrors [[covCells]]). */
@@ -1357,7 +1051,7 @@ object RetrievalQueries {
         FROM t$i)"""
 
   /** One DEEP (batched) BPE round as CTE text — mirrors one iteration of
-    * [[deepBpeTrainRounds]]: ranked candidate window, order-free
+    * [[graft.operators.Bpe.train]]: ranked candidate window, order-free
     * non-overlap selection (NOT EXISTS against higher ranks), the rule-set
     * fold, and the round's merge rows. Every multiply-referenced CTE is
     * `AS MATERIALIZED`: DuckDB inlines plain CTEs per reference, and the
