@@ -95,14 +95,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = DeploymentProfile.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
+    val measure = new Measure(spark)
     DeploymentProfile.jvmWarnings()
       .foreach(w => System.err.println(s"[bench] deployment profile: $w"))
     // warm the JVM/codegen/shuffle infra so the first measured query is not
@@ -169,23 +163,26 @@ object Bench {
     // outliers judge-unadjudicable; now a breaching retry escalates to a
     // third sample and the artifact carries the verdict either way.
     val verdicts = scala.collection.mutable.LinkedHashMap[String, String]()
+    // each query's Measure record (jobs, stages, tasks, driver gap, data
+    // moved, planning phases) of the sample kept as its value
+    val records = scala.collection.mutable.LinkedHashMap[String, Measure.Record]()
     def timeOnce(name: String, fn: (SparkSession, String) => DataFrame)
-        : (Double, Boolean, Long) = {
+        : (Double, Boolean, Long, Measure.Record) = {
       val steal0 = stealTicks()
-      val t0 = System.nanoTime()
-      val ok =
+      val (ok, rec) = measure.run(name) {
         try { materialize(fn(spark, sfDir)); true }
         catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
+      }
+      val dt = rec.wallMs / 1e3
       Caches.drain()
       val steal1 = stealTicks()
       load1(name) = loadAvg1()
       val sd = if (steal0 >= 0 && steal1 >= 0) steal1 - steal0 else -1L
       stealD(name) = sd
-      (dt, ok, sd)
+      (dt, ok, sd, rec)
     }
     val results = ordered.map { case (name, fn) =>
-      var (dt, ok, steal1st) = timeOnce(name, fn)
+      var (dt, ok, steal1st, rec) = timeOnce(name, fn)
       if (!ok) failed += name
       else committed.get(name).foreach { base =>
         if (breaches(dt, base)) {
@@ -193,8 +190,11 @@ object Bench {
           // up to two retries: stop as soon as a sample lands clean
           var tries = 0
           while (tries < 2 && breaches(samples.map(_._1).min, base)) {
-            val (dtN, okN, stealN) = timeOnce(name, fn)
-            if (okN) samples = samples :+ ((dtN, stealN))
+            val (dtN, okN, stealN, recN) = timeOnce(name, fn)
+            if (okN) {
+              if (dtN < samples.map(_._1).min) rec = recN
+              samples = samples :+ ((dtN, stealN))
+            }
             tries += 1
           }
           dt = samples.map(_._1).min
@@ -203,6 +203,7 @@ object Bench {
           verdicts(name) = verdictFor(samples, base)
         }
       }
+      records(name) = rec
       cacheMb(name) = codeCacheUsedMb()
       name -> dt
     }
@@ -262,8 +263,10 @@ object Bench {
     val verdictsFull = verdicts.map { case (k, v) =>
       s"\"" + k + "\":\"" + v + "\""
     }.mkString("{", ",", "}")
+    val measureFull = records.map { case (k, r) => s"\"" + k + "\":" + r.json }
+      .mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"failed":$failedJson,"code_cache_mb":$ccFull,"load1":$loadFull,"steal_ticks":$stealFull,"retried":$retriedFull,"retried_steal":$retriedStealFull,"verdicts":$verdictsFull,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qsFull,"failed":$failedJson,"code_cache_mb":$ccFull,"load1":$loadFull,"steal_ticks":$stealFull,"retried":$retriedFull,"retried_steal":$retriedStealFull,"verdicts":$verdictsFull,"measure":$measureFull,"sf":"$sfDir"}"""
     // a FILTERED run must not clobber the committed full artifact with a
     // partial per-query map — it gets its OWN per-query artifact instead
     // (bench_partial_<sf>.json), so outlier adjudication of a 2-query

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cross-family scale bench: replicate the corpus tables k× (default 10)
@@ -10,18 +10,19 @@ import org.apache.spark.sql.functions._
   * cross-query cache/codegen/GC interactions only show up when the heavy
   * queries share a JVM).
   *
-  * Replication scheme matches ScaleProbe: ids offset by r×10⁷ per replica,
-  * `documents.source` suffixed `_r` (so source-blocked pair joins treat
-  * replicas as disjoint corpora — the honest scale-up: exact-duplicate
-  * replicas WOULD be pairable content for unblocked dedup, and queries
-  * whose pair volume grows with cross-replica duplication are expected to
-  * grow superlinearly in OUTPUT, which the artifact records rather than
-  * hides).
+  * Replication is [[Tables.replicate]], as in ScaleProbe: ids offset by
+  * r×10⁷ per replica, `documents.source` suffixed `_r` (so source-blocked
+  * pair joins treat replicas as disjoint corpora — the honest scale-up:
+  * exact-duplicate replicas WOULD be pairable content for unblocked dedup,
+  * and queries whose pair volume grows with cross-replica duplication are
+  * expected to grow superlinearly in OUTPUT, which the artifact records
+  * rather than hides).
   *
   * Run: `sbt "runMain graft.CrossScaleBench [k] [query...]"`
   * (env SPARK_GRAFT_SF_DIR for the base corpus, default sf0.1).
   * Artifact: bench_scale<k>x_<sf>.json — per-query seconds at k×, alongside
-  * the committed 1× numbers for ratio reading.
+  * the committed 1× numbers for ratio reading, and under `measure` each
+  * query's [[Measure.Record]] of its kept pass.
   */
 object CrossScaleBench {
 
@@ -51,19 +52,11 @@ object CrossScaleBench {
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
 
-    val spark = DeploymentProfile.configure(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Measure.session()
+    val measure = new Measure(spark)
 
     // ---- materialize the k×-replicated corpus (one-time, not timed) ----
     val out = graft.Scratch.dir(s"graft_scale${k}x")
-    def reps: org.apache.spark.sql.Column =
-      explode(sequence(lit(0), lit(k - 1)))
     // 32 id-clustered files per replicated table: the base fixture is a
     // single parquet file, and an exploded 10× copy written at the read's
     // parallelism would land as a couple of huge row groups — every
@@ -75,27 +68,14 @@ object CrossScaleBench {
       df.repartitionByRange(32, col(idCol))
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
 
-    write(spark.read.parquet(s"$sfDir/documents.parquet")
-      .withColumn("r", reps)
-      .withColumn("doc_id", col("doc_id") + col("r") * lit(10000000L))
-      .withColumn("source", concat(col("source"), lit("_"), col("r")))
-      .drop("r"), "documents", "doc_id")
-    write(spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .withColumn("r", reps)
-      .withColumn("vec_id", col("vec_id") + col("r") * lit(10000000L))
-      .drop("r"), "embeddings", "vec_id")
-    // events: replicate through the PINNED NTZ read schema so the replica's
-    // ts column round-trips as TIMESTAMP(MICROS, NTZ) — Tables.load's
-    // epoch-ns rebuild contract
-    write(Tables.loadEventsRaw(spark, sfDir)
-      .withColumn("r", reps)
-      .withColumn("event_id", col("event_id") + col("r") * lit(10000000L))
-      .drop("r"), "events", "event_id")
-    Tables.names.filterNot(Seq("documents", "embeddings", "events").contains)
-      .foreach { n =>
-        val df = spark.read.parquet(s"$sfDir/$n.parquet")
-        write(df, n, df.columns.head)
+    Tables.names.foreach { n =>
+      Tables.replicaIds.get(n) match {
+        case Some(id) => write(Tables.replicate(spark, sfDir, n, k), n, id)
+        case None =>
+          val df = spark.read.parquet(s"$sfDir/$n.parquet")
+          write(df, n, df.columns.head)
       }
+    }
 
     // ---- warm, then run the picked queries in one session ----
     // GRAFT_SCALE_REPS (default 3) full passes over the query list; the
@@ -108,32 +88,34 @@ object CrossScaleBench {
     catch { case _: Throwable => () }
     spark.catalog.clearCache()
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    val best = scala.collection.mutable.LinkedHashMap[String, Double]()
+    val best = scala.collection.mutable.LinkedHashMap[String, Measure.Record]()
     for (rep <- 1 to repsN) {
       names.foreach { name =>
-        val t0 = System.nanoTime()
         // a pass that THROWS records no time: a fast failure (immediate
         // abort) must not become the query's "best" in the artifact
-        val ok =
+        val (ok, rec) = measure.run(name) {
           try { Bench.materialize(SparkEntry.queries(name)(spark, out)); true }
           catch { case _: Throwable => failed += name; false }
-        val dt = (System.nanoTime() - t0) / 1e9
+        }
         Caches.drain()
-        if (ok) best(name) = math.min(best.getOrElse(name, Double.MaxValue), dt)
+        if (ok && best.get(name).forall(_.wallMs > rec.wallMs)) best(name) = rec
       }
       spark.catalog.clearCache()
       System.err.println(s"[scalebench] pass $rep/$repsN done")
     }
-    val results = best.toSeq
+    val results = best.toSeq.map { case (n, r) => n -> r.wallMs / 1e3 }
 
     val qs = results.map { case (n, v) => "\"" + n + "\":" + v }
+      .mkString("{", ",", "}")
+    val records = best.map { case (n, r) => "\"" + n + "\":" + r.json }
       .mkString("{", ",", "}")
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = results.map(_._2).sum
     val sfTag = java.nio.file.Paths.get(sfDir).getFileName.toString
       .replaceAll("[^A-Za-z0-9._-]", "_")
     val line = s"""{"metric":"scale${k}x_total","value":$total,"unit":"sec",""" +
-      s""""k":$k,"queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+      s""""k":$k,"queries":$qs,"failed":$failedJson,"measure":$records,""" +
+      s""""sf":"$sfDir"}"""
     try {
       // a FILTERED run must not clobber the committed full artifact with a
       // partial per-query map (same rule as Bench's bench_partial_<sf>)

@@ -29,9 +29,11 @@ import org.apache.spark.sql.SparkSession
   *
   * The session half applies through [[configure]]; the JVM half cannot be
   * set at runtime, so [[jvmWarnings]] audits the running JVM and returns
-  * human-readable deviations for the entrypoints to print. Bench, Verify,
-  * and TpBench all build their sessions through this object, so a cluster
-  * deployment copying any of them inherits the profile deliberately.
+  * human-readable deviations for the entrypoints to print. Every main
+  * builds its session through this object — `Measure.session` for Bench,
+  * Verify, CrossScaleBench, Measure and the sweeps, and IndexMaintainer's
+  * own builder — so a cluster deployment copying any of them inherits the
+  * profile deliberately.
   */
 object DeploymentProfile {
 

@@ -1,21 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates docs/PLANS.md: the formatted physical plans of showcase
   * queries, as evidence that the designed plan shapes (pushdown, broadcast,
   * top-k, map-side assignment) are what actually executes.
-  * Run: sbt "runMain graft.PlanDump" */
+  * Run from the checkout root: sbt "runMain graft.PlanDump" (it writes
+  * docs/PLANS.md under the working directory). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = DeploymentProfile.configure(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Measure.session()
 
     val showcase = Seq(
       "v2_seq_range" ->
@@ -104,7 +97,7 @@ object PlanDump {
       sb.append("\n```\n")
     }
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("/root/repo/docs/PLANS.md"), sb.toString)
+      java.nio.file.Paths.get("docs/PLANS.md"), sb.toString)
     println(s"[plandump] wrote docs/PLANS.md (${showcase.size} plans)")
     spark.stop()
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-up probe: replicate the documents corpus k× (k = 1, 2, 4, 8) with
@@ -19,32 +19,17 @@ object ScaleProbe {
     val sections = args.toSet
     def on(s: String) = sections.isEmpty || sections(s)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = DeploymentProfile.configure(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Measure.session()
+    val measure = new Measure(spark)
 
-    def replicate(k: Int): DataFrame =
-      Tables.load(spark, sfDir, "documents")
-        .withColumn("r", explode(sequence(lit(0), lit(k - 1))))
-        .withColumn("doc_id", col("doc_id") + col("r") * lit(10000000L))
-        .withColumn("source", concat(col("source"), lit("_"), col("r")))
-        .drop("r")
+    def replicate(k: Int): DataFrame = Tables.replicate(spark, sfDir, "documents", k)
+    def replicateEmb(k: Int): DataFrame =
+      Tables.replicate(spark, sfDir, "embeddings", k)
 
     def time(f: => Long): (Double, Long) = {
-      val t0 = System.nanoTime()
-      val n = f
-      ((System.nanoTime() - t0) / 1e9, n)
+      val (n, rec) = measure.run("scaleprobe")(f)
+      (rec.wallMs / 1e3, n)
     }
-
-    def replicateEmb(k: Int): DataFrame =
-      Tables.load(spark, sfDir, "embeddings")
-        .withColumn("r", explode(sequence(lit(0), lit(k - 1))))
-        .withColumn("vec_id", col("vec_id") + col("r") * lit(10000000L))
-        .drop("r")
 
     // warmup
     replicate(1).count()
@@ -447,10 +432,7 @@ object ScaleProbe {
         // cache like every other section: the timed number must measure
         // the RE-LAYOUT (stats agg + range exchange + write), not a
         // recompute of the replication
-        val ev = Tables.load(spark, sfDir, "events")
-          .withColumn("r", explode(sequence(lit(0), lit(k - 1))))
-          .withColumn("event_id", col("event_id") + col("r") * lit(10000000L))
-          .drop("r").cache()
+        val ev = Tables.replicate(spark, sfDir, "events", k).cache()
         val nRows = ev.count()
         val out = graft.Scratch.dir(s"graft_probe_z_$k")
         val nFiles = 32
@@ -549,10 +531,7 @@ object ScaleProbe {
     if (on("pii")) {
       println(f"${"k"}%3s ${"docs"}%8s ${"pii_s"}%8s ${"us_per_doc"}%11s")
       Seq(1, 4, 16, 32).foreach { k =>
-        val d = Tables.load(spark, sfDir, "documents")
-          .withColumn("r", explode(sequence(lit(0), lit(k - 1))))
-          .withColumn("doc_id", col("doc_id") * lit(64L) + col("r"))
-          .drop("r").cache()
+        val d = replicate(k).cache()
         val nDocs = d.count()
         val (tPii, _) = time {
           operators.Pii.report(d, "text").collect().length.toLong

@@ -108,6 +108,26 @@ object Tables {
     cachedRelation(spark, s"raw:$dir/events", s"$dir/events.parquet")(
       spark.read.schema(eventsSchema).parquet(s"$dir/events.parquet"))
 
+  /** the id column of each table [[replicate]] scales */
+  val replicaIds: Map[String, String] =
+    Map("documents" -> "doc_id", "embeddings" -> "vec_id", "events" -> "event_id")
+
+  /** table `name` replicated k×, the one corpus scale-up the scale benches
+    * share: replica r offsets the id column by r×10⁷, and
+    * `documents.source` gains the suffix `_r`, so source-blocked pair
+    * joins treat the replicas as disjoint corpora. `events` keeps its
+    * TIMESTAMP_NTZ `ts` ([[loadEventsRaw]]), so a written replica reads
+    * back through [[load]] like the fixture. */
+  def replicate(spark: SparkSession, dir: String, name: String, k: Int): DataFrame = {
+    val id = replicaIds(name)
+    val base = if (name == "events") loadEventsRaw(spark, dir) else load(spark, dir, name)
+    val r = base.withColumn("r", explode(sequence(lit(0), lit(k - 1))))
+      .withColumn(id, col(id) + col("r") * lit(10000000L))
+    (if (name == "documents")
+      r.withColumn("source", concat(col("source"), lit("_"), col("r")))
+    else r).drop("r")
+  }
+
   /** TIMESTAMP_NTZ literal at `us` epoch-µs (UTC epoch arithmetic only —
     * no session-timezone dependence) */
   def ntzMicros(us: Long): Column =

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.transport.FakeJetStream
@@ -27,13 +26,7 @@ import graft.transport.FakeJetStream
 object TransportScaleProbe {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_TSP_MSGS", "262144").toLong
-    val spark = DeploymentProfile.configure(SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Measure.session()
 
     val url = "nats://transport-scale-probe:4222"
     val srv = FakeJetStream.listen(url)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -18,19 +17,9 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // session half of the measured deployment profile (see
-    // DeploymentProfile / docs/DEPLOYMENT.md)
-    val spark = DeploymentProfile.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // SQL surface: makes `FROM nats_scan(...)` and the proto/similarity
-      // SQL functions resolvable in the graded session
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the measured deployment session (DeploymentProfile, GraftExtensions
+    // for `FROM nats_scan(...)` and the SQL functions, UTC)
+    val spark = Measure.session()
     new java.io.File(outDir).mkdirs()
     def rmrf(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(rmrf)

@@ -453,7 +453,7 @@ object RetrievalQueries {
       // typedLit arrays (round-18, guide §1.2 driver work): literals embed
       // the values in the generated code, so every Lloyd iteration
       // recompiled a fresh codegen class (~0.3-0.5 s driver gap per
-      // iteration, JobProbe); with the values in a LocalRelation the
+      // iteration, counted per job); with the values in a LocalRelation the
       // iteration plans are textually identical and the codegen cache
       // hits. array_max over struct(cos, -cid) is order-independent
       // (total order on (s, nc)), so the argmax — ORDER BY s DESC, cid

@@ -8,9 +8,8 @@ import graft.queries.RetrievalQueries
 /** Job-count hygiene of the BPE queries: each one — training included,
   * since the trainer runs its rounds while the query is built — runs at
   * most the Spark jobs it ran before the two training loops were merged
-  * into [[graft.operators.Bpe]]. Jobs are counted per job group from
-  * Spark's status tracker after the listener bus drains: no sleeps, no
-  * wall-clock bounds. The bounds are the pre-merge counts at sf0.001 on
+  * into [[graft.operators.Bpe]]. Jobs are counted by [[Measure.run]]
+  * after the listener bus drains: no sleeps, no wall-clock bounds. The bounds are the pre-merge counts at sf0.001 on
   * this session shape. */
 class BpeJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -25,17 +24,14 @@ class BpeJobsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val dir = "/root/testdata/sf0.001"
 
+  private lazy val measure = new Measure(spark)
+
   /** Spark jobs one build + collect of query `name` runs. */
   private def jobsOf(name: String): Int = {
-    val sc = spark.sparkContext
-    val group = s"bpe-jobs-$name"
-    org.apache.spark.graftspec.ListenerBus.drain(sc)
-    sc.setJobGroup(group, name)
-    try RetrievalQueries.queries(name)(spark, dir).collect()
-    finally sc.clearJobGroup()
-    org.apache.spark.graftspec.ListenerBus.drain(sc)
+    val (_, rec) = measure.run(name)(
+      RetrievalQueries.queries(name)(spark, dir).collect())
     Caches.drain()
-    sc.statusTracker.getJobIdsForGroup(group).length
+    rec.jobs
   }
 
   Seq("pipe_bpe_train" -> 18, "pipe_bpe_apply" -> 23,

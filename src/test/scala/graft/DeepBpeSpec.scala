@@ -206,15 +206,11 @@ class DeepBpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val singles = Seq("a" -> 5L, "b" -> 2L, "c" -> 1L, "" -> 1L)
     def symbolsOf(t: Bpe.Trained): Map[String, Seq[String]] =
       t.symbols.select("w", "syms").as[(String, Seq[String])].collect().toMap
-    val sc = spark.sparkContext
+    val measure = new graft.Measure(spark)
     def jobs(rounds: Int): (Bpe.Trained, Int) = {
-      val group = s"bpe-singles-$rounds"
-      org.apache.spark.graftspec.ListenerBus.drain(sc)
-      sc.setJobGroup(group, group)
-      val t = try Bpe.train(vocabDf(singles), rounds, batch = 1, window = 1)
-        finally sc.clearJobGroup()
-      org.apache.spark.graftspec.ListenerBus.drain(sc)
-      (t, sc.statusTracker.getJobIdsForGroup(group).length)
+      val (t, rec) = measure.run(s"bpe-singles-$rounds")(
+        Bpe.train(vocabDf(singles), rounds, batch = 1, window = 1))
+      (t, rec.jobs)
     }
     val (one, jobs1) = jobs(1)
     val (many, jobs16) = jobs(16)

@@ -349,13 +349,8 @@ class StreamingDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert((1001L to 1020L).forall(vsIndex), vsIndex)
     assert(inBatch == (1042L to 1050L).toSet, inBatch)
 
-    val sc = spark.sparkContext
-    org.apache.spark.graftspec.ListenerBus.drain(sc)
-    sc.setJobGroup("gate-jobs", "one gate batch")
-    try StreamingDedup.ingest(cfg)(batchDf, 1L)
-    finally sc.clearJobGroup()
-    org.apache.spark.graftspec.ListenerBus.drain(sc)
-    val jobs = sc.statusTracker.getJobIdsForGroup("gate-jobs").length
+    val jobs = new graft.Measure(spark)
+      .run("one gate batch")(StreamingDedup.ingest(cfg)(batchDf, 1L))._2.jobs
     assert(jobs <= 13, s"one gate batch ran $jobs Spark jobs")
     val out = spark.read.parquet(cfg.outDir).select("doc_id").as[Long]
       .collect().toSet -- accepted.map(_.doc_id)
